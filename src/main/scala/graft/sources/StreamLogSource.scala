@@ -1,7 +1,7 @@
 package graft.sources
 
 import java.nio.charset.StandardCharsets.UTF_8
-import java.nio.file.{Files, Paths}
+import java.nio.file.Files
 import java.util.{Map => JMap}
 
 import scala.jdk.CollectionConverters._
@@ -20,7 +20,7 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.streamlog.{AuthSnapshot, MetaLog, Offset, S3Auth, SegmentIntegrity, SegmentMeta, StreamStores}
+import graft.streamlog.{AuthSnapshot, MetaCommits, Offset, S3Auth, SegmentIntegrity, SegmentMeta, SegmentTasks, StreamStores}
 
 /** DataSource V2 batch connector for the stream-log:
   *
@@ -311,27 +311,10 @@ class StreamLogScan(root: String, stream: String, lowerBound: String,
         out.result()
       case None => segs
     }
-    // Hadoop-addressable stores hand the reader a REAL path to stream
-    // lines through the FileSystem layer (range reads, no whole-object
-    // byte[]); non-addressable stores ("" path) fall back to one
-    // whole-object GET per segment
-    val paths = StreamStores.segmentStore(root, stream)
-      .scanPaths(kept.map(_.name))
-      .getOrElse(kept.map(_ => ""))
-    // driver credentials ride the partition so a fresh executor JVM
-    // signs its GETs (ADVICE r15 — the S3Auth registry is per-JVM)
-    val auth = StreamStores.s3AuthFor(root)
-    kept.zip(paths)
-      .map { case (m, p) =>
-        StreamLogPartition(root, stream, m.name, lowerBound, "", p, auth,
-          m.sha256): InputPartition
-      }
-      .toArray
+    StreamLogPartition.plan(root, stream, kept, lowerBound, "")
   }
 
-  private lazy val readerFactory = StreamLogReaderFactory(
-    new org.apache.spark.util.SerializableConfiguration(
-      org.apache.spark.sql.SparkSession.active.sessionState.newHadoopConf()))
+  private lazy val readerFactory = StreamLogReaderFactory.forActiveSession()
   override def createReaderFactory(): PartitionReaderFactory = readerFactory
 
   /** Micro-batch view: the stream's cursor IS the record offset — the
@@ -443,23 +426,12 @@ class StreamLogMicroBatch(root: String, stream: String, startAfter: String,
     if (until == Offset.Beginning) return Array.empty
     val st = StreamStores.replay(root, stream)
     val segs = st.index.segmentsAfter(after).filter(m => m.firstOffset <= until)
-    val paths = StreamStores.segmentStore(root, stream)
-      .scanPaths(segs.map(_.name))
-      .getOrElse(segs.map(_ => ""))
-    val auth = StreamStores.s3AuthFor(root)
-    segs.zip(paths)
-      .map { case (m, p) =>
-        StreamLogPartition(root, stream, m.name, after, until, p, auth,
-          m.sha256): InputPartition
-      }
-      .toArray
+    StreamLogPartition.plan(root, stream, segs, after, until)
   }
 
   // built ONCE per stream, not per micro-batch (a short-trigger query
   // would otherwise pay a full Configuration copy every batch)
-  private lazy val readerFactory = StreamLogReaderFactory(
-    new org.apache.spark.util.SerializableConfiguration(
-      org.apache.spark.sql.SparkSession.active.sessionState.newHadoopConf()))
+  private lazy val readerFactory = StreamLogReaderFactory.forActiveSession()
   override def createReaderFactory(): PartitionReaderFactory = readerFactory
   override def commit(end: SOffset): Unit = () // cursor durability = Spark checkpoint
   override def stop(): Unit = ()
@@ -554,34 +526,15 @@ class StreamLogStreamingWrite(root: String, stream: String,
     StreamLogStreamingWriterFactory(root, stream, base, StreamStores.s3AuthFor(root))
 
   override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
-    val segs = messages.collect { case s: SegmentCommit if s.records > 0 => s }
-      .sortBy(_.firstOffset)
-    if (segs.isEmpty) return
-    segs.sliding(2).foreach {
-      case Array(a, b) => require(a.lastOffset < b.firstOffset,
-        s"overlapping segments in streaming epoch $epochId: ${a.name} / ${b.name}")
-      case _ =>
-    }
-    // fencing + idempotent replay + overlap validation all live in the
-    // storage-agnostic conditional-append protocol (MetaCommits) — on
-    // POSIX the store locks per primitive; on an object store the
-    // If-Match tag compare is the whole mechanism
-    val now = System.currentTimeMillis()
-    val metas = segs.map(s =>
-      SegmentMeta(s.name, s.firstOffset, s.lastOffset, now, s.records, s.bytes,
-        s.sha256)).toSeq
-    graft.streamlog.MetaCommits.commitSinkEpoch(
-      StreamStores.metaStore(root, stream),
-      writerEpoch, queryId, epochId, metas)
-    ()
+    val metas = SegmentCommits.metas(messages, s"streaming epoch $epochId")
+    // fencing, idempotent replay and overlap with the log: MetaCommits
+    if (metas.nonEmpty)
+      MetaCommits.commitSinkEpoch(StreamStores.metaStore(root, stream),
+        writerEpoch, queryId, epochId, metas)
   }
 
   override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit =
-    messages.foreach {
-      case s: SegmentCommit if s.name.nonEmpty =>
-        StreamStores.segmentStore(root, stream).delete(s.name)
-      case _ =>
-    }
+    SegmentCommits.abort(root, stream, messages)
 }
 
 case class StreamLogStreamingWriterFactory(root: String, stream: String, base: Long,
@@ -593,57 +546,13 @@ case class StreamLogStreamingWriterFactory(root: String, stream: String, base: L
 
   override def createWriter(partitionId: Int, taskId: Long,
                             epochId: Long): DataWriter[InternalRow] =
-    new DataWriter[InternalRow] {
-      private var first: String = _
-      private var last: String = _
-      private var records = 0L
-      private var bytes = 0L
+    new SegmentWriter(root, stream, s"s-$partitionId-$taskId-$epochId", auth, dataCol = 0) {
       private val epoch = base + epochId
-      auth.foreach(S3Auth.ensureRegistered)
-      private val store = StreamStores.segmentStore(root, stream)
-      private val tmp = store.newSpool(s"s-$partitionId-$taskId-$epochId")
-      private lazy val out = Files.newBufferedWriter(tmp, UTF_8)
-      // running digest of the exact spooled bytes (r18 read-path
-      // integrity) — costs one hash pass interleaved with the write,
-      // no re-read of the spool at commit
-      private val md = java.security.MessageDigest.getInstance("SHA-256")
-
-      override def write(row: InternalRow): Unit = {
-        val data = row.getUTF8String(0).toString
-        require(!data.contains('\n') && !data.contains('\r'),
-          "records must not contain newlines (NDJSON segment format)")
-        require(records < PartitionStride,
+      override protected def offsetOf(row: InternalRow): String = {
+        require(written < PartitionStride,
           s"partition $partitionId exceeded $PartitionStride rows in one epoch")
-        val off = Offset.serialize(epoch, partitionId * PartitionStride + records)
-        if (first == null) first = off
-        last = off
-        out.write(off); out.write(data); out.write("\n")
-        val dataBytes = data.getBytes(UTF_8)
-        md.update(off.getBytes(UTF_8)); md.update(dataBytes); md.update('\n'.toByte)
-        records += 1
-        bytes += Offset.Width + 1L + dataBytes.length
+        Offset.serialize(epoch, partitionId * PartitionStride + written)
       }
-
-      override def commit(): WriterCommitMessage = {
-        if (records == 0) {
-          // the spool may exist even though write() never ran (the
-          // default newSpool creates the file eagerly) — delete it or
-          // every empty partition of every epoch leaks one tmp file
-          Files.deleteIfExists(tmp)
-          return SegmentCommit("", "", "", 0L, 0L)
-        }
-        out.close()
-        val name = s"$first-${java.util.UUID.randomUUID()}.seg"
-        store.putFromFile(name, tmp)
-        SegmentCommit(name, first, last, records, bytes,
-          SegmentIntegrity.hex(md))
-      }
-
-      override def abort(): Unit = {
-        try out.close() catch { case _: Throwable => () }
-        Files.deleteIfExists(tmp)
-      }
-      override def close(): Unit = ()
     }
 }
 
@@ -653,39 +562,111 @@ class StreamLogBatchWrite(root: String, stream: String,
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
     StreamLogWriterFactory(root, stream, StreamStores.s3AuthFor(root))
 
+  /** Atomic against OTHER bulk loads through the conditional append
+    * ([[MetaCommits.commitBulk]] re-validates fencing and non-overlap
+    * against the log at each attempt's tag); load-vs-publish
+    * serialization is the caller's job, as in the reference, where one
+    * Durable Object serializes all writes. */
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val segs = messages.collect { case s: SegmentCommit if s.records > 0 => s }
-      .sortBy(_.firstOffset)
-    if (segs.isEmpty) return
-    segs.sliding(2).foreach {
-      case Array(a, b) => require(a.lastOffset < b.firstOffset,
-        s"overlapping segments in bulk load: ${a.name} / ${b.name}")
-      case _ =>
-    }
-    // The read-validate-append must be atomic against OTHER bulk loads:
-    // two concurrent commits could both validate against the same meta
-    // snapshot and append overlapping ranges. That atomicity is now the
-    // conditional-append protocol (MetaCommits over the MetaStore seam):
-    // each attempt re-reads the log with a tag, re-validates fencing +
-    // non-overlap against the CURRENT index, and appends iff the tag
-    // still matches — a lost race re-decides against the interloper's
-    // commit instead of appending blindly. publish() remains
-    // single-writer by contract (class scaladoc) and replays the log on
-    // refresh(), so load-vs-publish serialization is the caller's job —
-    // matching the reference, where one Durable Object serializes all
-    // writes. Commit-layer fencing: a claimWriter() newer than this
-    // load's token refuses the commit (segments already moved into
-    // place become orphans the next purgeOrphans() collects).
-    val now = System.currentTimeMillis()
-    val metas = segs.map(s =>
-      SegmentMeta(s.name, s.firstOffset, s.lastOffset, now, s.records, s.bytes,
-        s.sha256)).toSeq
-    graft.streamlog.MetaCommits.commitBulk(
-      StreamStores.metaStore(root, stream),
-      writerEpoch, metas)
+    val metas = SegmentCommits.metas(messages, "bulk load")
+    if (metas.nonEmpty)
+      MetaCommits.commitBulk(StreamStores.metaStore(root, stream), writerEpoch, metas)
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit =
+    SegmentCommits.abort(root, stream, messages)
+}
+
+case class StreamLogWriterFactory(root: String, stream: String,
+                                  auth: Option[AuthSnapshot] = None)
+    extends DataWriterFactory {
+  override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
+    new SegmentWriter(root, stream, s"w-$partitionId-$taskId", auth, dataCol = 1) {
+      override protected def offsetOf(row: InternalRow): String = {
+        val off = row.getUTF8String(0).toString
+        require(off.length == Offset.Width, s"bad offset '$off'")
+        require(lastOffset.forall(_ < off), s"unsorted offsets: ${lastOffset.orNull} then $off")
+        off
+      }
+    }
+}
+
+/** The one DSv2 segment writer behind both write paths: a task spools
+  * `offset ++ data ++ '\n'` lines, digests the spooled bytes as it goes
+  * (no re-read at commit) and puts the spool as one segment. The
+  * factories say only where a row's offset comes from ([[offsetOf]]). */
+private[sources] abstract class SegmentWriter(root: String, stream: String,
+                                              spoolHint: String,
+                                              auth: Option[AuthSnapshot],
+                                              dataCol: Int)
+    extends DataWriter[InternalRow] {
+  auth.foreach(S3Auth.ensureRegistered)
+  private val store = StreamStores.segmentStore(root, stream)
+  private val tmp = store.newSpool(spoolHint)
+  private lazy val out = Files.newBufferedWriter(tmp, UTF_8)
+  private val md = java.security.MessageDigest.getInstance("SHA-256")
+  private var first: String = _
+  private var last: String = _
+  private var records = 0L
+  private var bytes = 0L
+
+  protected def written: Long = records
+  protected def lastOffset: Option[String] = Option(last)
+  /** This row's offset — assigned or read from the row, and validated. */
+  protected def offsetOf(row: InternalRow): String
+
+  override def write(row: InternalRow): Unit = {
+    val off = offsetOf(row)
+    val data = row.getUTF8String(dataCol).toString
+    require(!data.contains('\n') && !data.contains('\r'),
+      "records must not contain newlines (NDJSON segment format)")
+    if (first == null) first = off
+    last = off
+    out.write(off); out.write(data); out.write("\n")
+    val dataBytes = data.getBytes(UTF_8)
+    md.update(off.getBytes(UTF_8)); md.update(dataBytes); md.update('\n'.toByte)
+    records += 1
+    bytes += Offset.Width + 1L + dataBytes.length
+  }
+
+  override def commit(): WriterCommitMessage = {
+    if (records == 0) {
+      // the default newSpool creates the file eagerly: don't leak it
+      Files.deleteIfExists(tmp)
+      return SegmentCommit("", "", "", 0L, 0L)
+    }
+    out.close()
+    val name = s"$first-${java.util.UUID.randomUUID()}.seg"
+    store.putFromFile(name, tmp)
+    SegmentCommit(name, first, last, records, bytes, SegmentIntegrity.hex(md))
+  }
+
+  override def abort(): Unit = {
+    try out.close() catch { case _: Throwable => () }
+    Files.deleteIfExists(tmp)
+  }
+  override def close(): Unit = ()
+}
+
+/** The driver side shared by both write paths' commit and abort. */
+private[sources] object SegmentCommits {
+
+  /** The tasks' non-empty segments as metadata, offset-sorted; refuses
+    * overlap between them (overlap with the log is MetaCommits'). */
+  def metas(messages: Array[WriterCommitMessage], what: String): Seq[SegmentMeta] = {
+    val segs = messages.collect { case s: SegmentCommit if s.records > 0 => s }
+      .sortBy(_.firstOffset)
+    segs.sliding(2).foreach {
+      case Array(a, b) => require(a.lastOffset < b.firstOffset,
+        s"overlapping segments in $what: ${a.name} / ${b.name}")
+      case _ =>
+    }
+    val now = System.currentTimeMillis()
+    segs.map(s => SegmentMeta(s.name, s.firstOffset, s.lastOffset, now,
+      s.records, s.bytes, s.sha256)).toSeq
+  }
+
+  def abort(root: String, stream: String, messages: Array[WriterCommitMessage]): Unit =
     messages.foreach {
       case s: SegmentCommit if s.name.nonEmpty =>
         StreamStores.segmentStore(root, stream).delete(s.name)
@@ -693,104 +674,42 @@ class StreamLogBatchWrite(root: String, stream: String,
     }
 }
 
-case class StreamLogWriterFactory(root: String, stream: String,
-                                  auth: Option[AuthSnapshot] = None)
-    extends DataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    new DataWriter[InternalRow] {
-      private var first: String = _
-      private var last: String = _
-      private var records = 0L
-      private var bytes = 0L
-      auth.foreach(S3Auth.ensureRegistered)
-      private val store = StreamStores.segmentStore(root, stream)
-      private val tmp = store.newSpool(s"w-$partitionId-$taskId")
-      private lazy val out = Files.newBufferedWriter(tmp, UTF_8)
-      private val md = java.security.MessageDigest.getInstance("SHA-256")
-
-      override def write(row: InternalRow): Unit = {
-        val off = row.getUTF8String(0).toString
-        val data = row.getUTF8String(1).toString
-        require(off.length == Offset.Width, s"bad offset '$off'")
-        require(last == null || off > last, s"unsorted offsets: $last then $off")
-        require(!data.contains('\n') && !data.contains('\r'),
-          "records must not contain newlines (NDJSON segment format)")
-        if (first == null) first = off
-        last = off
-        out.write(off); out.write(data); out.write("\n")
-        val dataBytes = data.getBytes(UTF_8)
-        md.update(off.getBytes(UTF_8)); md.update(dataBytes); md.update('\n'.toByte)
-        records += 1
-        bytes += Offset.Width + 1L + dataBytes.length
-      }
-
-      override def commit(): WriterCommitMessage = {
-        if (records == 0) {
-          Files.deleteIfExists(tmp) // eager default spool — don't leak it
-          return SegmentCommit("", "", "", 0L, 0L)
-        }
-        out.close()
-        val name = s"$first-${java.util.UUID.randomUUID()}.seg"
-        store.putFromFile(name, tmp)
-        SegmentCommit(name, first, last, records, bytes,
-          SegmentIntegrity.hex(md))
-      }
-
-      override def abort(): Unit = { try out.close() catch { case _: Throwable => () }; Files.deleteIfExists(tmp) }
-      override def close(): Unit = ()
-    }
-}
-
 /** One segment scanned for offsets in (after, until]; empty `until`
-  * means unbounded (batch reads). `path` non-empty = a Hadoop-
-  * addressable URI the task STREAMS lines from (range reads through
-  * the FileSystem layer — the s3a/gcs/hdfs production shape); empty =
-  * the task re-resolves the [[SegmentStore]] from the (root, stream)
-  * strings and GETs the whole object (the non-addressable bucket-sim
-  * fallback).
-  */
+  * means unbounded (batch reads). The task opens it with
+  * [[graft.streamlog.SegmentTasks.lines]], the reader readAfter and
+  * compaction use too. */
 case class StreamLogPartition(root: String, stream: String, seg: String,
                               after: String, until: String,
-                              path: String = "",
+                              path: Option[String] = None,
                               auth: Option[AuthSnapshot] = None,
                               sha256: String = "")
     extends InputPartition
 
-/** Carries the DRIVER's Hadoop configuration to the reading tasks
-  * (r15 review: a bare `new Configuration()` in the task ignores
-  * `spark.hadoop.*` session properties — the standard spark-submit way
-  * to configure s3a credentials — so the DSv2 path and
-  * `spark.read.text` would silently resolve different filesystems).
-  * Built once per scan on the driver from the active session. */
+object StreamLogPartition {
+  /** One partition per segment reading (after, until]; the driver's S3
+    * credentials ride each so a fresh executor JVM signs its GETs. */
+  def plan(root: String, stream: String, segs: Seq[SegmentMeta],
+           after: String, until: String): Array[InputPartition] = {
+    val auth = StreamStores.s3AuthFor(root)
+    SegmentTasks.plan(StreamStores.segmentStore(root, stream), segs)
+      .map(r => StreamLogPartition(root, stream, r.seg, after, until,
+        r.path, auth, r.sha256): InputPartition)
+      .toArray
+  }
+}
+
+/** Reads a [[StreamLogPartition]] and keeps its (after, until] rows.
+  * Carries the DRIVER's Hadoop configuration to the tasks: a bare
+  * `new Configuration()` there would ignore the `spark.hadoop.*` session
+  * properties that configure s3a credentials. */
 case class StreamLogReaderFactory(
     conf: org.apache.spark.util.SerializableConfiguration)
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[StreamLogPartition]
     new PartitionReader[InternalRow] {
-      // Hadoop path: an incremental line reader over the open stream —
-      // constant memory regardless of segment size; GET fallback: the
-      // whole object's lines (bounded by the compaction MaxBytes)
-      private var toClose: java.io.Closeable = null
-      private val rawLines: Iterator[String] = SegmentIntegrity.verified(
-        p.seg, p.sha256,
-        if (p.path.nonEmpty) {
-          val hp = new org.apache.hadoop.fs.Path(p.path)
-          val fs = hp.getFileSystem(conf.value)
-          val br = new java.io.BufferedReader(new java.io.InputStreamReader(
-            fs.open(hp), UTF_8))
-          toClose = br
-          Iterator.continually(br.readLine()).takeWhile(_ != null)
-        } else {
-          p.auth.foreach(S3Auth.ensureRegistered)
-          // lazy range-streaming where the store supports it (s3:) —
-          // the task never materializes the whole segment
-          StreamStores.segmentStore(p.root, p.stream).linesIterator(p.seg)
-        })
-      // the wrapper checks its digest only when the RAW iterator is
-      // drained, so a limit-pushed early exit (a partial read by
-      // definition) neither pays nor fakes a verification
-      private val lines = rawLines
+      private val lines = SegmentTasks.lines(p.root, p.stream, p.seg, p.sha256,
+          p.path, p.auth, conf.value)
         .filter { l =>
           l.length >= Offset.Width && {
             val off = l.substring(0, Offset.Width)
@@ -805,7 +724,14 @@ case class StreamLogReaderFactory(
           UTF8String.fromString(l.substring(0, Offset.Width)),
           UTF8String.fromString(l.substring(Offset.Width)))
       }
-      override def close(): Unit = if (toClose != null) toClose.close()
+      override def close(): Unit = ()
     }
   }
+}
+
+object StreamLogReaderFactory {
+  /** A factory carrying the active session's Hadoop conf. */
+  def forActiveSession(): StreamLogReaderFactory = StreamLogReaderFactory(
+    new org.apache.spark.util.SerializableConfiguration(
+      org.apache.spark.sql.SparkSession.active.sessionState.newHadoopConf()))
 }

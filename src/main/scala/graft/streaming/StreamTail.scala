@@ -6,16 +6,19 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 
 import graft.streamlog.{Offset, StreamLog}
 
-/** Streaming tail over a stream-log segment directory — the reference's
-  * long-poll consumer loop (/root/reference/src/stream_manager.ts:306-326,
-  * 454-467) re-expressed as Structured Streaming: new segment files ARE
-  * the poke; the file source discovers them per micro-batch, so a
-  * `writeStream` over [[records]] delivers exactly the long-poll
-  * semantics (deliver-on-flush, no busy-wait) with checkpointed
-  * exactly-once state on top — which the reference cannot do.
+/** Streaming tail over a stream log — the reference's long-poll
+  * consumer loop (stream_manager.ts:306-326, 454-467) re-expressed as
+  * Structured Streaming: [[records]] reads the log through the DSv2
+  * micro-batch source (`readStream.format("streamlog")`), whose cursor
+  * is the record offset; each trigger plans the segments committed past
+  * that cursor from the metadata log, so a `writeStream` over it
+  * delivers exactly the long-poll semantics (deliver-on-flush, no
+  * busy-wait) with checkpointed exactly-once state on top — which the
+  * reference cannot do.
   *
-  * At scale the segment directory is an object-store prefix;
-  * `maxFilesPerTrigger` bounds per-batch work and watermarks bound state.
+  * The source's `maxRecordsPerTrigger` / `maxBytesPerTrigger` options
+  * bound per-batch work (planned from segment metadata) and watermarks
+  * bound state.
   */
 object StreamTail {
 
@@ -28,7 +31,7 @@ object StreamTail {
     */
   def records(spark: SparkSession, log: StreamLog): DataFrame =
     spark.readStream.format("streamlog")
-      .option("path", log.streamDir.getParent.toString)
+      .option("path", log.root)
       .option("stream", log.name)
       .load()
 
@@ -136,7 +139,7 @@ object StreamTail {
     payloads
       .select(Offset.serializeCol(lit(epoch), idx).as("offset"), col("data"))
       .write.format("streamlog")
-      .option("path", log.streamDir.getParent.toString)
+      .option("path", log.root)
       .option("stream", log.name)
       .mode("append")
       .save()
@@ -144,16 +147,14 @@ object StreamTail {
   }
 
   /** Continuous produce INTO the log: foreachBatch + [[appendBatch]] —
-    * the write-side twin of [[records]]. Each micro-batch lands as one
-    * locked bulk commit; on crash-recovery Spark may REPLAY the last
-    * uncommitted batch, so delivery into the log is at-least-once
-    * (exactly the reference's produce semantics — a retried HTTP produce
-    * also duplicates; run the log's exact-dedup downstream if the
-    * pipeline needs effectively-once).
-    */
-  /** foreachBatch produce-into-the-log with CALLER-CHOSEN record order
+    * the write-side twin of [[records]], with CALLER-CHOSEN record order
     * (`orderBy` decides offset order inside each batch — use when the
-    * stream's semantic order differs from arrival order). When arrival
+    * stream's semantic order differs from arrival order). Each
+    * micro-batch lands as one locked bulk commit; on crash-recovery
+    * Spark may REPLAY the last uncommitted batch, so delivery into the
+    * log is at-least-once (exactly the reference's produce semantics — a
+    * retried HTTP produce also duplicates; run the log's exact-dedup
+    * downstream if the pipeline needs effectively-once). When arrival
     * order is fine, prefer the NATIVE sink — `df.select(col("data"))
     * .writeStream.format("streamlog")` — which assigns partition-
     * disjoint offsets with exactly-once epoch commits and writer

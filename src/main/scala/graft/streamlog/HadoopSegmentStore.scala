@@ -11,11 +11,11 @@ import org.apache.hadoop.fs.{FileSystem, Path => HPath}
   * proven" and "point spark-submit at s3a:// and go": any
   * Hadoop-addressable scheme (file, hdfs, s3a, gcs, abfs — they all
   * implement create/open/listStatus/delete) roots the segment DATA
-  * plane here, and [[scanPaths]] returns the REAL URIs, so both
-  * [[StreamLog.readAfter]] and the DSv2 batch/micro-batch scan plan
-  * range-streaming file reads (locality, incremental line decoding)
-  * instead of the whole-object-GET fallback the non-addressable stores
-  * force.
+  * plane here, and [[scanPaths]] returns the REAL URIs, so the one
+  * task-side segment reader ([[SegmentTasks.lines]], behind
+  * [[StreamLog.readAfter]], compaction and the DSv2 batch/micro-batch
+  * scan) streams file reads (incremental line decoding) instead of the
+  * whole-object-GET fallback the non-addressable stores force.
   *
   * Atomic-visibility strategy per scheme ([[SegmentStore]] contract:
   * a reader sees the complete object or no object):
@@ -226,9 +226,9 @@ final class HadoopSegmentStore(baseUri: String) extends SegmentStore {
       .sorted
     catch { case _: FileNotFoundException => Seq.empty }
 
-  /** Real URIs — the whole point of this adapter: `spark.read.text`
-    * and the DSv2 reader stream these through the FileSystem layer
-    * (range reads, locality hints) instead of GETting whole objects. */
+  /** Real URIs — the whole point of this adapter: the task-side reader
+    * ([[SegmentTasks.lines]]) streams these through the FileSystem layer
+    * instead of GETting whole objects. */
   override def scanPaths(names: Seq[String]): Option[Seq[String]] =
     Some(names.map(n => path(n).toString))
 }

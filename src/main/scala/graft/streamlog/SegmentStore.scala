@@ -143,11 +143,11 @@ trait SegmentStore {
     ()
   }
 
-  /** Paths a Spark/Hadoop scan can read these objects from directly
-    * (POSIX file paths; a real bucket adapter returns `s3a://…` URIs),
-    * or None when the backend is not Hadoop-addressable (the in-memory
-    * bucket sim) — [[StreamLog.readAfter]] then distributes GETs over
-    * the object names instead. */
+  /** Paths a Spark task can read these objects from directly (POSIX
+    * file paths; a real bucket adapter returns `s3a://…` URIs), or None
+    * when the backend is not Hadoop-addressable (the in-memory bucket
+    * sim) — the one task-side reader, [[SegmentTasks.lines]], then reads
+    * each object through the store its task re-resolves. */
   def scanPaths(names: Seq[String]): Option[Seq[String]]
 }
 

@@ -259,14 +259,7 @@ final class StreamLog(val spark: SparkSession, val root: String, val name: Strin
     * offset strictly greater than `after` ("-" = beginning). Only segments
     * whose range can intersect are handed to the scan (metadata pruning).
     * Ordering/limit are left to the caller so Catalyst can pick
-    * TakeOrderedAndProject for consume-with-limit.
-    *
-    * Hadoop-addressable stores ([[SegmentStore.scanPaths]] Some) go
-    * through `spark.read.text` — pushdown, codegen, the works. A
-    * non-addressable store (the bucket sim) distributes whole-object
-    * GETs over the segment NAMES instead: one task per segment
-    * re-resolves the store and reads its lines — the same task shape
-    * the DSv2 reader uses, nothing driver-side. */
+    * TakeOrderedAndProject for consume-with-limit. */
   def readAfter(after: String = Offset.Beginning): DataFrame = {
     val segs = index.segmentsAfter(after)
     import spark.implicits._
@@ -277,61 +270,22 @@ final class StreamLog(val spark: SparkSession, val root: String, val name: Strin
     if (after == Offset.Beginning) df else df.filter(col("offset") > after)
   }
 
-  /** Raw segment lines as a one-column ("value") DataFrame: through
-    * `spark.read.text` when the store is Hadoop-addressable, else one
-    * distributed GET task per segment (names only in the closure — the
-    * task re-resolves the store from (root, stream), the same shape as
-    * an s3a client resolving per task). */
-  private def rawLines(segs: Seq[SegmentMeta]): DataFrame =
-    segStore.scanPaths(segs.map(_.name)) match {
-      // Hadoop-addressable path: one streaming task per segment over
-      // the FileSystem API, wrapped in the SAME recorded-sha256
-      // verification as the bucket branch and the DSv2 reader
-      // (StreamLogReaderFactory) — previously this branch was
-      // spark.read.text and TRUSTED the FileSystem layer, making the
-      // "corruption caught at compaction" guarantee plane-dependent
-      // (notably s3a ETag validation does not cover multipart-uploaded
-      // objects end-to-end; ADVICE r18). The driver's Hadoop conf
-      // rides the closure so spark.hadoop.* session properties (s3a
-      // credentials et al.) reach the task exactly as they reach
-      // spark.read.text.
-      case Some(paths) =>
-        import spark.implicits._
-        val conf = new org.apache.spark.util.SerializableConfiguration(
-          spark.sessionState.newHadoopConf())
-        spark.createDataset(paths.zip(segs.map(m => (m.name, m.sha256))))
-          .repartition(segs.size)
-          .flatMap { case (path, (seg, sha)) =>
-            val hp = new org.apache.hadoop.fs.Path(path)
-            val fs = hp.getFileSystem(conf.value)
-            val br = new java.io.BufferedReader(new java.io.InputStreamReader(
-              fs.open(hp), java.nio.charset.StandardCharsets.UTF_8))
-            // close on task end, not just on drain — a downstream limit
-            // may abandon the iterator mid-segment
-            Option(org.apache.spark.TaskContext.get()).foreach(
-              _.addTaskCompletionListener[Unit](_ => br.close()))
-            SegmentIntegrity.verified(seg, sha,
-              Iterator.continually(br.readLine()).takeWhile(_ != null))
-          }
-          .toDF("value")
-      case None =>
-        import spark.implicits._
-        val (r, n) = (root, name)
-        // driver credentials ride the closure so a fresh executor JVM
-        // signs its GETs (ADVICE r15 — the S3Auth registry is per-JVM)
-        val auth = StreamStores.s3AuthFor(root)
-        spark.createDataset(segs.map(m => (m.name, m.sha256)))
-          .repartition(segs.size)
-          .flatMap { case (seg, sha) =>
-            auth.foreach(S3Auth.ensureRegistered)
-            // full-segment read (compaction merge / readAfter drains
-            // it) → the running digest is checked at exhaustion, so a
-            // flipped stored byte fails HERE, before any merge commits
-            SegmentIntegrity.verified(seg, sha,
-              StreamStores.segmentStore(r, n).linesIterator(seg))
-          }
-          .toDF("value")
-    }
+  /** Raw segment lines as a one-column ("value") DataFrame: one task per
+    * segment reads it with [[SegmentTasks.lines]], the DSv2 source's
+    * reader too, so a flipped stored byte fails readAfter and compaction
+    * on every plane. The driver's S3 credentials and Hadoop conf ride
+    * the closure. */
+  private def rawLines(segs: Seq[SegmentMeta]): DataFrame = {
+    import spark.implicits._
+    val (r, n) = (root, name)
+    val auth = StreamStores.s3AuthFor(root)
+    val conf = new org.apache.spark.util.SerializableConfiguration(
+      spark.sessionState.newHadoopConf())
+    spark.createDataset(SegmentTasks.plan(segStore, segs))
+      .repartition(segs.size)
+      .flatMap(s => SegmentTasks.lines(r, n, s.seg, s.sha256, s.path, auth, conf.value))
+      .toDF("value")
+  }
 
   /** Driver-side consume: exclusive-start offset, in-order, limited —
     * the reference's getMessagesFromOffset with segment chaining
@@ -429,53 +383,13 @@ final class StreamLog(val spark: SparkSession, val root: String, val name: Strin
   // Compaction
   // ------------------------------------------------------------------
 
-  /** Plan and execute one compaction: k-way merge of the planner's window
-    * into a single segment (ts:521-609, kway.ts:7-55). The merge is a
-    * distributed Spark sort over the window's files — the driver never
-    * materializes records. Contiguous sorted inputs make this an ordered
-    * concat, which a single-partition sort performs in one pass.
+  /** Plan and execute one compaction: k-way merge of the planner's first
+    * window into a single segment (ts:521-609, kway.ts:7-55) — exactly
+    * [[compactAll]] capped at one window.
     * @return the merged segment's metadata, or None if nothing to compact. */
   def compactOnce(limits: Compaction.Limits = Compaction.Limits(),
-                  nowMs: () => Long = () => System.currentTimeMillis()): Option[SegmentMeta] = {
-    val window = stateLock.synchronized(Compaction.window(index.segments, limits))
-    if (window.isEmpty) return None
-
-    val merged = SegmentMeta(
-      name = s"${window.head.firstOffset}-${UUID.randomUUID()}.seg",
-      firstOffset = window.head.firstOffset,
-      lastOffset = window.last.lastOffset,
-      createdMS = nowMs(),
-      records = window.map(_.records).sum,
-      bytes = window.map(_.bytes).sum)
-
-    // Window output is bounded (< 2*MaxBytes), so one partition; offsets are
-    // the 32-char line prefix, so sorting whole lines == sorting by offset.
-    val tmpDir = streamDir.resolve(s".merge-${UUID.randomUUID()}")
-    rawLines(window)
-      .repartition(1)
-      .sortWithinPartitions("value")
-      .write.mode("overwrite").text(tmpDir.toString)
-    val part = listDir(tmpDir)
-      .filter(p => p.getFileName.toString.startsWith("part-")) match {
-        case Seq(p) => p
-        case ps => throw new IllegalStateException(s"expected 1 part file, got $ps")
-      }
-    // digest the spool BEFORE putFromFile consumes it (one streaming
-    // pass; the commit's add entry records it for future readers)
-    val mergedSha = S3Http.sha256HexOfFile(part)
-    segStore.putFromFile(merged.name, part)
-    deleteRecursively(tmpDir)
-    val mergedWithSha = merged.copy(sha256 = mergedSha)
-
-    stateLock.synchronized {
-      val ts = nowMs()
-      window.foreach(m => index = index.remove(m))
-      index = index.add(mergedWithSha)
-      tombstones ++= window.map(_.name -> ts)
-      appendMeta(window.map(m => MetaJson.tombstone(m.name, ts)) :+ MetaJson.add(mergedWithSha): _*)
-    }
-    Some(mergedWithSha)
-  }
+                  nowMs: () => Long = () => System.currentTimeMillis()): Option[SegmentMeta] =
+    compactAll(limits, nowMs, maxWindowsPerJob = 1).headOption
 
   /** Delete tombstoned segment files older than `maxAgeMs` (ts:590-636;
     * reference default 1 day). */
@@ -543,8 +457,10 @@ final class StreamLog(val spark: SparkSession, val root: String, val name: Strin
     * Spark job: each window's files are read, tagged with a window id,
     * repartitioned so a window is exactly one partition, sorted, and
     * written out per-window via partitionBy — so a 10 000-segment
-    * backlog costs one job per PASS, not one job per window (sequential
-    * compactOnce jobs would pay per-job latency a thousand times over).
+    * backlog costs one job per PASS, not one job per window. The merge
+    * is a distributed sort, never a driver loop over records; offsets
+    * are the 32-char line prefix, so sorting whole lines == sorting by
+    * offset, and a window's output is bounded (< 2*MaxBytes).
     *
     * Plan width is CAPPED at `maxWindowsPerJob` windows per job: a
     * genuine cold-start backlog would otherwise build a driver plan
@@ -557,12 +473,10 @@ final class StreamLog(val spark: SparkSession, val root: String, val name: Strin
   def compactAll(limits: Compaction.Limits = Compaction.Limits(),
                  nowMs: () => Long = () => System.currentTimeMillis(),
                  maxWindowsPerJob: Int = 64): Seq[SegmentMeta] = {
-    import org.apache.spark.sql.functions.{col, lit}
     require(maxWindowsPerJob >= 1, s"maxWindowsPerJob must be >= 1, got $maxWindowsPerJob")
     val windows = stateLock.synchronized(
       Compaction.windows(index.segments, limits).take(maxWindowsPerJob))
     if (windows.isEmpty) return Seq.empty
-    if (windows.lengthCompare(1) == 0) return compactOnce(limits, nowMs).toSeq
 
     val merged = windows.map { w =>
       SegmentMeta(
@@ -586,6 +500,8 @@ final class StreamLog(val spark: SparkSession, val root: String, val name: Strin
         case Seq(p) => p
         case ps => throw new IllegalStateException(s"expected 1 part file for wid=$i, got $ps")
       }
+      // digest the spool BEFORE putFromFile consumes it (one streaming
+      // pass; the commit's add entry records it for future readers)
       val sha = S3Http.sha256HexOfFile(part)
       segStore.putFromFile(merged(i).name, part)
       merged(i).copy(sha256 = sha)

@@ -88,6 +88,25 @@ class StreamTailSpec extends SparkSpec {
     log.destroy()
   }
 
+  test("tail and appendBatch address the log's own stream on a mem: root") {
+    import spark.implicits._
+    // a bucket-rooted log's streamDir is local scratch, not its root:
+    // both directions must resolve the stream from log.root
+    val log = new StreamLog(spark, s"mem:tail-${java.util.UUID.randomUUID()}", "s")
+    log.publish(Seq(ev(60000, 1, 1.0), ev(61000, 2, 2.0)))
+    val q = StreamTail.records(spark, log).writeStream
+      .format("memory").queryName("tail_mem").outputMode("append")
+      .trigger(Trigger.AvailableNow()).start()
+    q.awaitTermination(60000)
+    assert(spark.sql("SELECT count(*) FROM tail_mem").head().getLong(0) == 2)
+
+    StreamTail.appendBatch(log, Seq(("a", 1L)).toDF("data", "k"),
+      orderBy = Seq("k"))
+    assert(log.consume(graft.streamlog.Offset.Beginning, 100).map(_._2).last == "a")
+    assert(log.segments.size == 2)
+    log.destroy()
+  }
+
   test("tail does not re-deliver records after compaction rewrites them") {
     val log = freshLog()
     var t = 8000000L

@@ -24,10 +24,10 @@ object FreshJvmReader {
       "this fixture must start with an empty credential registry")
     val root = s"s3:$endpoint/$bucket"
     val p = graft.sources.StreamLogPartition(root, stream, seg,
-      Offset.Beginning, "", "",
+      Offset.Beginning, "", None,
       Some(AuthSnapshot(endpoint, creds, System.currentTimeMillis())))
     // the reader factory's Hadoop conf is only used for path-bearing
-    // partitions; the GET fallback (path = "") never touches it
+    // partitions; the GET fallback (no path) never touches it
     val factory = graft.sources.StreamLogReaderFactory(
       new org.apache.spark.util.SerializableConfiguration(
         new org.apache.hadoop.conf.Configuration()))

@@ -37,7 +37,7 @@ object FreshJvmRotatingReader {
     val snap = try in.readObject().asInstanceOf[AuthSnapshot] finally in.close()
     require(snap.provider.isDefined, "the snapshot must carry the provider")
     val p = graft.sources.StreamLogPartition(s"s3:$endpoint/$bucket", stream,
-      seg, Offset.Beginning, "", "", Some(snap))
+      seg, Offset.Beginning, "", None, Some(snap))
     val factory = graft.sources.StreamLogReaderFactory(
       new org.apache.spark.util.SerializableConfiguration(
         new org.apache.hadoop.conf.Configuration()))

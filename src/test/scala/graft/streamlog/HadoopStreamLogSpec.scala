@@ -112,13 +112,13 @@ class HadoopStreamLogSpec extends SparkSpec {
     val parts = scan.planInputPartitions()
       .map(_.asInstanceOf[graft.sources.StreamLogPartition])
     assert(parts.length == 3)
-    assert(parts.forall(p => p.path.startsWith("file:")),
+    assert(parts.forall(p => p.path.exists(_.startsWith("file:"))),
       s"hadoop-rooted partitions must carry scan paths: ${parts.map(_.path).toSeq}")
     // offset pruning composes: a bounded scan plans fewer partitions
     val bounded = new graft.sources.StreamLogScan(root, "s1", offs(9))
       .planInputPartitions()
       .map(_.asInstanceOf[graft.sources.StreamLogPartition])
-    assert(bounded.length < 3 && bounded.forall(_.path.startsWith("file:")))
+    assert(bounded.length < 3 && bounded.forall(_.path.exists(_.startsWith("file:"))))
 
     // a mem root (non-addressable) keeps the GET fallback shape
     val memRoot = s"mem:bucket-${java.util.UUID.randomUUID()}"
@@ -158,7 +158,7 @@ class HadoopStreamLogSpec extends SparkSpec {
     val end = mb.latestOffset()
     val mbParts = mb.planInputPartitions(mb.initialOffset(), end)
       .map(_.asInstanceOf[graft.sources.StreamLogPartition])
-    assert(mbParts.nonEmpty && mbParts.forall(_.path.startsWith("file:")))
+    assert(mbParts.nonEmpty && mbParts.forall(_.path.exists(_.startsWith("file:"))))
 
     // streaming sink with checkpoint restart: exactly-once over hadoop
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream

@@ -1,6 +1,7 @@
 package graft.streamlog
 
 import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.Files
 import java.util.UUID
 
 import graft.SparkSpec
@@ -25,6 +26,15 @@ class SegmentIntegritySpec extends SparkSpec {
     store.put(seg, b)
   }
 
+  /** One fresh root per segment plane: the `mem:` bucket (its tasks
+    * read through [[SegmentStore.linesIterator]]), a POSIX directory and
+    * a `hadoop:file://` root (their tasks read through the Hadoop path
+    * the store's [[SegmentStore.scanPaths]] hands them). */
+  private def freshRoots(): Seq[String] = Seq(
+    s"mem:integrity-${UUID.randomUUID()}",
+    Files.createTempDirectory("graft-integrity").toString,
+    s"hadoop:file://${Files.createTempDirectory("graft-integrity-hadoop")}")
+
   test("publish records the segment sha256 in metadata and it matches the stored bytes") {
     val root = s"mem:integrity-${UUID.randomUUID()}"
     val log = new StreamLog(spark, root, "s1")
@@ -42,7 +52,10 @@ class SegmentIntegritySpec extends SparkSpec {
   }
 
   test("FAULTY-BUCKET GATE: a flipped stored byte is caught at compaction time, not merged silently") {
-    val root = s"mem:integrity-${UUID.randomUUID()}"
+    freshRoots().foreach(faultyBucketGate)
+  }
+
+  private def faultyBucketGate(root: String): Unit = {
     val log = new StreamLog(spark, root, "s1")
     val t = { var x = 1000000000000L; () => { x += 1; x } }
     log.publish((1 to 50).map(i => s"""{"i":$i}"""), nowMs = t)
@@ -63,10 +76,10 @@ class SegmentIntegritySpec extends SparkSpec {
       if (e == null) Nil else e :: chain(e.getCause)
     assert(chain(ex).exists(c => c.isInstanceOf[CorruptSegmentException] ||
         Option(c.getMessage).exists(_.contains("failed integrity verification"))),
-      s"expected CorruptSegmentException in the cause chain, got: $ex")
+      s"$root: expected CorruptSegmentException in the cause chain, got: $ex")
     val after = StreamStores.replay(root, "s1")
-    assert(after.index.segments.size == 2, "no merge may have committed")
-    assert(after.tombstones.isEmpty, "originals must not be tombstoned")
+    assert(after.index.segments.size == 2, s"$root: no merge may have committed")
+    assert(after.tombstones.isEmpty, s"$root: originals must not be tombstoned")
   }
 
   test("a clean stream compacts fine and the MERGED segment's recorded sha re-arms verification") {
@@ -96,7 +109,10 @@ class SegmentIntegritySpec extends SparkSpec {
   }
 
   test("DSv2 scan verifies full-segment reads; a limit-pushed partial read does not fake one") {
-    val root = s"mem:integrity-${UUID.randomUUID()}"
+    freshRoots().foreach(dsv2ScanGate)
+  }
+
+  private def dsv2ScanGate(root: String): Unit = {
     val log = new StreamLog(spark, root, "s1")
     log.publish((1 to 100).map(i => s"""{"i":$i}"""))
     val seg = StreamStores.replay(root, "s1").index.segments.head.name
@@ -109,7 +125,8 @@ class SegmentIntegritySpec extends SparkSpec {
     // a full ROW scan drains the iterator → digest mismatch → loud failure
     val ex = intercept[Exception] { df.collect() }
     assert(ex.toString.contains("integrity") ||
-      Option(ex.getCause).exists(_.toString.contains("integrity")))
+      Option(ex.getCause).exists(_.toString.contains("integrity")),
+      s"$root: full scan of a corrupted segment must fail loud, got: $ex")
     // a LIMIT small enough to early-exit the segment is a PARTIAL read:
     // no digest comparison is possible, so it must return rows, not
     // throw on an unverifiable prefix (structural: verification only
