@@ -79,14 +79,18 @@ trait MetaStore {
     * pair's FIRST element equals the tag the caller's state was
     * replayed at, the committed log is exactly caller-state + the
     * appended lines, and the caller may adopt the SECOND element as
-    * its new replay tag ([[StreamLog]]'s poll probe uses this to skip
-    * the redundant replay after its own publishes — ADVICE r14). ONE
+    * its new replay tag. [[StreamLog]] does so after its own commits:
+    * its poll probe then skips the redundant replay (ADVICE r14), and
+    * its next metadata commit makes its first conditional attempt at
+    * the adopted tag without reading the log. A stale adopted tag costs
+    * speed, not safety: it only loses the compare-and-append, and the
+    * loss falls back to a re-read. ONE
     * volatile tuple, written atomically inside the successful
     * appendIf/replaceIf where both tags are in hand — two separate
     * fields would let an interleaved commit from ANOTHER handle
     * sharing this store instance (mem: roots) pair our read tag with
     * its commit tag, silently hiding its lines from the adopter (r15
-    * review). Advisory diagnostics — no protocol decision reads it. */
+    * review). */
   @volatile protected var lastCommitInfoVar: (Long, Long) = (0L, 0L)
   final def lastCommitInfo: (Long, Long) = lastCommitInfoVar
 

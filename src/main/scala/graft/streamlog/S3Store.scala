@@ -30,7 +30,9 @@ import java.nio.charset.StandardCharsets.UTF_8
   * ([[S3MetaStore.probeTag]] — the ETag for ~zero bytes, where r14
   * paid a whole-log GET per probe), and a conditional commit threads
   * the body its decision read into the PUT instead of re-GETting —
-  * an uncontended commit costs exactly 1 GET + 1 PUT.
+  * an uncontended commit costs exactly 1 GET + 1 PUT, and a
+  * [[StreamLog]] handle's commit right after its own costs 1 PUT
+  * (the store keeps the body it last wrote; see [[S3MetaStore]]).
   *
   * Remaining stated gap: for bucket-rooted DSv2 scans this adapter
   * still reads whole objects by name ([[scanPaths]] None — no s3a
@@ -412,13 +414,15 @@ private[streamlog] object S3Http {
   * exactly the contract's "no lock anywhere" mode. The body+ETag the
   * commit loop's own `readWithTag` GET returned is threaded through to
   * the PUT (an uncontended commit = 1 GET + 1 PUT; r14 paid a second
-  * GET inside every attempt); a tag that does not match the cached
-  * read — a caller composing tags some other way — falls back to a
-  * fresh GET, so the fast path is an optimization, never a contract
-  * change. An absent log (tag 0) commits with `If-None-Match: *`
-  * (create-only). A 409 (concurrent-attempt rejection) or 412 (lost
-  * precondition) both report false; [[MetaStore.commit]]'s re-read
-  * loop is the retry path for both, per the stated requirements.
+  * GET inside every attempt), and so is the body of this store's own
+  * last landed write (an append at the tag it produced = 1 PUT); a tag
+  * that matches neither — a caller composing tags some other way —
+  * falls back to a fresh GET, so the fast path is an optimization,
+  * never a contract change. An absent log (tag 0) commits with
+  * `If-None-Match: *` (create-only). A 409 (concurrent-attempt
+  * rejection) or 412 (lost precondition) both report false;
+  * [[MetaStore.commit]]'s re-read loop is the retry path for both,
+  * per the stated requirements.
   */
 final class S3MetaStore(endpoint: String, bucket: String, key: String,
                         auth: S3AuthRef = S3AuthRef.Unsigned)
@@ -429,10 +433,14 @@ final class S3MetaStore(endpoint: String, bucket: String, key: String,
   private def parse(bytes: Array[Byte]): Vector[String] =
     new String(bytes, UTF_8).split("\n", -1).toVector.filter(_.nonEmpty)
 
-  /** (tag, body, server ETag) of the most recent 200 GET — the read a
-    * conditional commit threads into its PUT. @volatile snapshot
-    * semantics: writers replace the whole tuple, readers compare the
-    * tag they hold against the snapshot's. */
+  /** (tag, body, server ETag) of the log as this store last saw it:
+    * the most recent 200 GET, or the body of the most recent landed
+    * conditional write with the ETag the server answered. A conditional
+    * commit threads it into its PUT, so an append at the tag of this
+    * store's own last write — [[StreamLog]]'s first commit attempt, at
+    * the tag its state replays — costs the PUT alone. @volatile
+    * snapshot semantics: writers replace the whole tuple, readers
+    * compare the tag they hold against the snapshot's. */
   @volatile private var lastGet: (Long, Array[Byte], String) =
     (0L, Array.emptyByteArray, "")
 
@@ -476,7 +484,7 @@ final class S3MetaStore(endpoint: String, bucket: String, key: String,
       val r = S3Http.sendWith(auth, "PUT", url, bytes, Seq("If-None-Match" -> "*"))
       r.status match {
         case 200 =>
-          r.etag.foreach(e => lastCommitInfoVar = (tag, S3Http.tagOf(e)))
+          landed(tag, bytes, r.etag)
           true
         case 412 | 409 => false
         case s => throw new IllegalStateException(s"PUT $url -> $s")
@@ -502,7 +510,7 @@ final class S3MetaStore(endpoint: String, bucket: String, key: String,
       val r = S3Http.sendWith(auth, "PUT", url, body, Seq("If-Match" -> etag))
       r.status match {
         case 200 =>
-          r.etag.foreach(e => lastCommitInfoVar = (tag, S3Http.tagOf(e)))
+          landed(tag, body, r.etag)
           true
         case 412 | 409 => false
         case s => throw new IllegalStateException(s"PUT $url -> $s")
@@ -512,6 +520,17 @@ final class S3MetaStore(endpoint: String, bucket: String, key: String,
     case _: java.io.IOException => false // ambiguous → lost, retry re-reads
   }
 
+  /** A conditional write landed on `tag` and left `body` under `etag`:
+    * record the move for [[MetaStore.lastCommitInfo]] and cache the
+    * written body as [[lastGet]], so the next append at the tag this
+    * write produced needs no GET. */
+  private def landed(tag: Long, body: Array[Byte], etag: Option[String]): Unit =
+    etag.foreach { e =>
+      val next = S3Http.tagOf(e)
+      lastGet = (next, body, e)
+      lastCommitInfoVar = (tag, next)
+    }
+
   override def appendIf(tag: Long, lines: Seq[String]): Boolean =
     putIf(tag, lines.mkString("", "\n", "\n").getBytes(UTF_8), appendTo = true)
 
@@ -519,6 +538,7 @@ final class S3MetaStore(endpoint: String, bucket: String, key: String,
     putIf(tag, lines.mkString("", "\n", "\n").getBytes(UTF_8), appendTo = false)
 
   override def clear(): Unit = {
+    lastGet = (0L, Array.emptyByteArray, "")
     val r = S3Http.sendWith(auth, "DELETE", url)
     require(r.status == 204 || r.status == 200 || r.status == 404,
       s"DELETE $url -> ${r.status}")

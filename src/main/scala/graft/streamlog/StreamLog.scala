@@ -92,6 +92,9 @@ final class StreamLog(val spark: SparkSession, val root: String, val name: Strin
   @volatile private var writerEpochVar: Long = 0L  // log's recorded epoch
   @volatile private var myWriterEpoch: Long = 0L   // this handle's claim (0 = unclaimed)
   @volatile private var loadedTag: Long = 0L       // meta-log tag the state was replayed at
+  // a commit of ours landed past loadedTag: the log holds lines the
+  // state lacks, so appendMeta's first attempt could only lose
+  @volatile private var replayBehind: Boolean = false
 
   /** Flush notification monitor: publish() pokes it after a segment lands,
     * so same-process pollers wake immediately instead of sleeping out
@@ -139,9 +142,11 @@ final class StreamLog(val spark: SparkSession, val root: String, val name: Strin
     * advisory locks. Returns the claimed epoch (pass to DSv2 writes as
     * the `writerEpoch` option). */
   def claimWriter(): Long = stateLock.synchronized {
+    val before = loadedTag
     val next = MetaCommits.claimWriter(store, myWriterEpoch)
     myWriterEpoch = next
     writerEpochVar = next
+    replayBehind = !adoptOwnCommit(before)
     next
   }
 
@@ -155,6 +160,7 @@ final class StreamLog(val spark: SparkSession, val root: String, val name: Strin
   private def applyReplay(snap: (Vector[String], Long)): Unit = {
     val st = MetaLog.replayLines(snap._1)
     loadedTag = snap._2
+    replayBehind = false
     index = st.index; tombstones = st.tombstones
     producerVersionVar = st.producerVersion
     lastOffsetVar = st.lastOffset
@@ -163,44 +169,70 @@ final class StreamLog(val spark: SparkSession, val root: String, val name: Strin
   }
 
   /** Every metadata append is a CONDITIONAL APPEND through the
-    * [[MetaStore]] seam ([[MetaCommits.fencedAppend]]): read the log
-    * with a tag, check, append iff still at that tag, retry on a lost
-    * race — so a maintenance pass concurrent with a cross-process bulk
-    * load can neither interleave half-written meta lines nor append
-    * between the load's replay-validate and its own append (ADVICE r2).
-    * On POSIX the primitives additionally take the commit lock; on an
-    * object store the tag compare (If-Match) is the whole mechanism.
-    * Record publishing itself remains single-writer per stream by
-    * contract (class scaladoc) — the conditional append makes the
-    * METADATA log safe against the concurrent writers the design does
-    * allow: bulk loaders and superseding claimants.
+    * [[MetaStore]] seam: append iff the log is still at a tag, retry on
+    * a lost race — so a maintenance pass concurrent with a cross-process
+    * bulk load can neither interleave half-written meta lines nor
+    * append between the load's replay-validate and its own append
+    * (ADVICE r2). On POSIX the primitives additionally take the commit
+    * lock; on an object store the tag compare (If-Match) is the whole
+    * mechanism. Record publishing itself remains single-writer per
+    * stream by contract (class scaladoc) — the conditional append makes
+    * the METADATA log safe against the concurrent writers the design
+    * does allow: bulk loaders and superseding claimants.
     *
-    * FENCING: the decide step re-reads the log's writer epoch on every
-    * attempt; if a newer [[claimWriter]] has superseded this handle the
-    * append throws [[WriterFencedException]] instead of committing —
-    * the check-on-apply half of the fencing-token protocol (a stale
-    * writer's distributed work may complete, but its COMMIT cannot
-    * land). While no writer has ever claimed (epoch 0 on disk and
-    * here), the check is vacuous and the legacy single-writer-by-
-    * contract behavior is unchanged.
+    * FIRST ATTEMPT WITHOUT A READ: the handle's in-memory state is the
+    * replay of the log at `loadedTag` plus its own commits since, so
+    * the first attempt appends at `loadedTag` directly. A single-writer
+    * handle re-reading the log it wrote one commit ago learns nothing:
+    * on an object store this saves the GET, leaving a publish at
+    * segment PUT + metadata PUT. A landed attempt proves the log was
+    * exactly the one the state replays, so the fence decision below is
+    * the one the re-read would have made. A lost or ambiguous attempt
+    * (another writer committed, a spurious 409, a dropped response)
+    * falls through to [[MetaCommits.fencedAppend]], which re-reads and
+    * re-decides as every commit did before; an ambiguous attempt that
+    * did land appends its lines twice, which replays to the same state
+    * (MetaStore stated requirement #3). A commit that lands past
+    * `loadedTag` leaves the state behind the log, so later commits skip
+    * the first attempt until the next replay ([[refresh]], the poll
+    * probe, maintenance): a handle sharing its stream with another
+    * writer pays what every commit paid before, never more.
+    *
+    * FENCING: the first attempt runs only while the replayed writer
+    * epoch is not newer than this handle's claim. Otherwise, and on
+    * every re-read attempt, a log recording a newer [[claimWriter]]
+    * makes the append throw [[WriterFencedException]] instead of
+    * committing — the check-on-apply half of the fencing-token
+    * protocol (a stale writer's distributed work may complete, but its
+    * COMMIT cannot land). While no writer has ever claimed (epoch 0 on
+    * disk and here), the check is vacuous and the legacy single-writer-
+    * by-contract behavior is unchanged.
     */
   private def appendMeta(lines: String*): Unit = {
     val before = loadedTag
-    MetaCommits.fencedAppend(store, myWriterEpoch, lines)
-    // Fast-forward the replay tag past our OWN commit (ADVICE r14: the
-    // first poll probe after every same-handle publish otherwise sees
-    // tag != loadedTag and pays a redundant full locked replay) — but
-    // ONLY when the landed write's read-tag equals the tag this
-    // handle's state replays. The (landedOn, movedTo) pair is ONE
-    // atomic snapshot from the store (r15 review: mem: roots share one
-    // store instance across handles, so reading two separate fields
-    // could pair our read tag with ANOTHER handle's commit tag and
-    // silently hide its lines). If anything interleaved, the pair's
-    // first element differs from `before`, loadedTag stays stale on
-    // purpose, and the next probe refreshes.
+    val landed = !replayBehind && writerEpochVar <= myWriterEpoch &&
+      store.appendIf(before, lines)
+    if (!landed) MetaCommits.fencedAppend(store, myWriterEpoch, lines)
+    replayBehind = !adoptOwnCommit(before)
+  }
+
+  /** Fast-forward the replay tag past this handle's OWN commit (ADVICE
+    * r14: the next poll probe otherwise sees tag != loadedTag and pays
+    * a redundant full locked replay, and the next [[appendMeta]] loses
+    * its first attempt) — but ONLY when the landed write's read-tag
+    * equals `before`, the tag this handle's state replays. The
+    * (landedOn, movedTo) pair is ONE atomic snapshot from the store
+    * (r15 review: mem: roots share one store instance across handles,
+    * so reading two separate fields could pair our read tag with
+    * ANOTHER handle's commit tag and silently hide its lines). If
+    * anything interleaved, the pair's first element differs from
+    * `before`, loadedTag stays stale on purpose, and the next probe
+    * refreshes. True iff the tag moved. */
+  private def adoptOwnCommit(before: Long): Boolean = {
     val (landedOn, movedTo) = store.lastCommitInfo
-    if (landedOn == before && movedTo != 0L)
-      loadedTag = movedTo
+    val adopt = landedOn == before && movedTo != 0L
+    if (adopt) loadedTag = movedTo
+    adopt
   }
 
   // ------------------------------------------------------------------

@@ -11,8 +11,8 @@ import org.apache.spark.sql.SparkSession
   *
   * Phases, per segment count S (fresh server + stream each):
   *   - `publish@S`  — S batches of `RecordsPerBatch` records through one
-  *     handle (the uncontended-commit wire shape: 1 meta GET + 1 segment
-  *     PUT + 1 meta PUT per batch);
+  *     handle (the same-handle wire shape: 1 segment PUT + 1 meta PUT
+  *     per batch, no meta GET);
   *   - `consume@S`  — a FRESH handle reads everything back through the
   *     range-streaming path (1 meta GET + ~1 range GET per segment at
   *     the default 4 MiB chunk);
@@ -279,10 +279,11 @@ object BenchStreamlog {
   }
 
   /** Publish/consume at one batch size over a fresh server+stream —
-    * the crossover sweep. The 3-wire-ops-per-batch publish invariant
-    * (1 meta GET + 1 segment PUT + 1 meta PUT, batch size IRRELEVANT)
-    * is required here at artifact-generation time and pinned by the
-    * spec at two sizes. */
+    * the crossover sweep. The 2-wire-ops-per-batch publish invariant
+    * (1 segment PUT + 1 meta PUT, no meta GET: the handle commits at
+    * the tag of its own last write; batch size IRRELEVANT) is required
+    * here at artifact-generation time and pinned by the spec at two
+    * sizes. */
   def runSweep(spark: SparkSession, batchSize: Int,
                batches: Int): Seq[(String, Phase)] = {
     val srv = new S3LiteServer()
@@ -304,10 +305,10 @@ object BenchStreamlog {
         val w = (System.nanoTime() - t0) / 1e9
         val (gets, puts) = (srv.gets - g0, srv.puts - p0)
         // the invariant the sweep exists to prove: wire ops per batch
-        // stays EXACTLY 3 as batch size grows 100x
-        require(gets == batches && puts == 2 * batches,
+        // stays EXACTLY 2 as batch size grows 100x
+        require(gets == 0 && puts == 2 * batches,
           s"publish wire economy broke at batchSize=$batchSize: " +
-            s"$gets GETs + $puts PUTs for $batches batches (want 1+2 per batch)")
+            s"$gets GETs + $puts PUTs for $batches batches (want 0+2 per batch)")
         out += s"publish_b$batchSize@$batches" ->
           Phase(total, w, gets, puts, 0, 0, 0, 0)
       }

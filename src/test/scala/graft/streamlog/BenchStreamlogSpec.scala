@@ -74,16 +74,16 @@ class BenchStreamlogSpec extends SparkSpec {
     assert(faults.transportExhausted == 0L)
   }
 
-  test("batch-size sweep invariant: publish stays EXACTLY 3 wire ops per batch as batch size grows 10x") {
+  test("batch-size sweep invariant: publish stays EXACTLY 2 wire ops per batch as batch size grows 10x") {
     // the crossover claim's load-bearing half (VERDICT r17 #3): bigger
     // batches must not change the per-batch wire shape — runSweep
-    // itself REQUIREs gets==batches && puts==2*batches, so reaching
-    // the phase list at both sizes IS the invariant
+    // itself REQUIREs gets==0 && puts==2*batches, so reaching the
+    // phase list at both sizes IS the invariant
     Seq(200, 2000).foreach { size =>
       val phases = BenchStreamlog.runSweep(spark, size, batches = 3).toMap
       val pub = phases(s"publish_b$size@3")
       assert(pub.records == 3L * size)
-      assert(pub.wireOps == 9, s"b=$size: ${pub.wireOps} ops for 3 batches")
+      assert(pub.wireOps == 6, s"b=$size: ${pub.wireOps} ops for 3 batches")
       val con = phases(s"consume_b$size@3")
       assert(con.records == pub.records)
       assert(con.rangeGets >= 1, "sweep consume rides the range path")
@@ -138,10 +138,11 @@ class BenchStreamlogSpec extends SparkSpec {
       Set("publish@6", "consume@6", "compact@6", "maintain@6"))
     val pub = phases("publish@6")
     assert(pub.records == 6L * BenchStreamlog.RecordsPerBatch)
-    // uncontended publish = 1 meta GET + 1 segment PUT + 1 meta PUT per
-    // batch (the r14 GET-economy contract, now regressed via the bench)
-    assert(pub.gets <= 6 + 2, s"publish paid ${pub.gets} GETs for 6 batches")
-    assert(pub.puts <= 12 + 2, s"publish paid ${pub.puts} PUTs for 6 batches")
+    // same-handle publish = 1 segment PUT + 1 meta PUT per batch and no
+    // meta GET: each commit lands at the tag of the handle's own last
+    // write (the r14 GET-economy contract, now regressed via the bench)
+    assert(pub.gets == 0, s"publish paid ${pub.gets} GETs for 6 batches")
+    assert(pub.puts == 12, s"publish paid ${pub.puts} PUTs for 6 batches")
     val con = phases("consume@6")
     assert(con.records == pub.records)
     // range-streaming consume: ~1 meta GET + 1 range GET per segment

@@ -40,7 +40,13 @@ class DataPlaneFuzzSpec extends SparkSpec {
 
   /** InMemory metadata store with seeded fault injection on every
     * conditional write (same semantics as ProtocolFuzzSpec's): spurious
-    * = report false, land nothing; ambiguous = land, report false. */
+    * = report false, land nothing; ambiguous = land, report false.
+    * Only a write whose precondition holds can land: a bucket answers
+    * a write at a stale tag with 412 whatever happens to the response,
+    * so an ambiguous draw on such a write is a plain loss, and only
+    * the landed ones count as injected ambiguities. (A handle's first
+    * commit attempt runs at the tag its state replays, which another
+    * handle's commit may have made stale.) */
   private class SeededFaultyMetaStore(rng: scala.util.Random,
                                       spuriousRate: Double,
                                       ambiguousRate: Double)
@@ -51,8 +57,7 @@ class DataPlaneFuzzSpec extends SparkSpec {
       val draw = rng.nextDouble()
       if (draw < spuriousRate) { spuriousInjected += 1; false }
       else if (draw < spuriousRate + ambiguousRate) {
-        ambiguousInjected += 1
-        assert(attempt, "an ambiguous write must actually land")
+        if (attempt) ambiguousInjected += 1
         false
       } else attempt
     }

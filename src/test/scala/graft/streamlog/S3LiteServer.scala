@@ -266,29 +266,42 @@ final class S3LiteServer(maxKeys: Int = 1000,
     * MetaStore's stated requirement #3 demands adapters resolve as
     * lost-and-retry. */
   @volatile var dropResponses: Int = 0
-  @volatile var puts: Int = 0
+
+  // Per-method hit counters. AtomicInteger, like the kill counters:
+  // the 8 handler threads increment them concurrently, and a `+= 1` on
+  // a volatile Int loses increments, which exact wire-count specs see.
+  private val putsN = new java.util.concurrent.atomic.AtomicInteger(0)
+  private val postsN = new java.util.concurrent.atomic.AtomicInteger(0)
+  private val getsN = new java.util.concurrent.atomic.AtomicInteger(0)
+  private val headsN = new java.util.concurrent.atomic.AtomicInteger(0)
+  private val deletesN = new java.util.concurrent.atomic.AtomicInteger(0)
+  private val rangeGetsN = new java.util.concurrent.atomic.AtomicInteger(0)
+  private val range416sN = new java.util.concurrent.atomic.AtomicInteger(0)
+  private val batchDeletedKeysN = new java.util.concurrent.atomic.AtomicInteger(0)
+  private val authRejectsN = new java.util.concurrent.atomic.AtomicInteger(0)
+  def puts: Int = putsN.get
   /** Multipart control-plane POSTs (initiate + complete). */
-  @volatile var posts: Int = 0
-  @volatile var gets: Int = 0
-  @volatile var heads: Int = 0
-  @volatile var deletes: Int = 0
+  def posts: Int = postsN.get
+  def gets: Int = getsN.get
+  def heads: Int = headsN.get
+  def deletes: Int = deletesN.get
   /** GETs that carried a `Range: bytes=a-b` header and were answered
     * 206 — the range-streaming read path's wire evidence. */
-  @volatile var rangeGets: Int = 0
+  def rangeGets: Int = rangeGetsN.get
   /** Range GETs answered 416 (start at/past EOF) — counted separately
     * (ADVICE r19) so specs can assert the reader issues NO trailing
     * past-EOF request when the object length is known. */
-  @volatile var range416s: Int = 0
+  def range416s: Int = range416sN.get
   /** Keys removed through multi-object delete (`POST ?delete`) — the
-    * batch-economy evidence: k keys for posts += 1. */
-  @volatile var batchDeletedKeys: Int = 0
+    * batch-economy evidence: k keys for one POST. */
+  def batchDeletedKeys: Int = batchDeletedKeysN.get
   /** Per-key failure injection for multi-object delete: keys in this
     * set are NOT removed and come back as `<Error>` entries inside the
     * 200 DeleteResult (quiet mode lists only failures) — the
     * documented partial-failure shape real S3 reports. */
   @volatile var failDeleteKeys: Set[String] = Set.empty
   /** 403s issued by the SigV4 verifier (0 on a healthy signed run). */
-  @volatile var authRejects: Int = 0
+  def authRejects: Int = authRejectsN.get
   /** Artificial per-request latency — loopback RTT is ~0, so overlap
     * effects (range readahead, parallel parts) need a simulated wire
     * delay to be measurable. Applied before any handler. */
@@ -553,7 +566,7 @@ final class S3LiteServer(maxKeys: Int = 1000,
       else Array.emptyByteArray
     verifySig(ex, body) match {
       case Some(reason) =>
-        authRejects += 1
+        authRejectsN.incrementAndGet()
         System.err.println(s"[s3lite] 403: $reason")
         respond(ex, 403)
         return
@@ -577,7 +590,7 @@ final class S3LiteServer(maxKeys: Int = 1000,
       query.split("&").exists(p => p == name || p.startsWith(s"$name="))
     (ex.getRequestMethod, key) match {
       case ("GET", "") if query.contains("list-type=2") =>
-        gets += 1
+        getsN.incrementAndGet()
         list(ex, query)
 
       // ---- multi-object delete (the documented DeleteObjects API:
@@ -585,7 +598,7 @@ final class S3LiteServer(maxKeys: Int = 1000,
       // quiet mode returns an empty DeleteResult; absent keys are
       // no-ops, exactly like single DELETE) ----
       case ("POST", "") if hasBare("delete") =>
-        posts += 1
+        postsN.incrementAndGet()
         val want = java.util.Base64.getEncoder.encodeToString(
           java.security.MessageDigest.getInstance("MD5").digest(body))
         if (!Option(ex.getRequestHeaders.getFirst("Content-MD5")).contains(want))
@@ -601,7 +614,7 @@ final class S3LiteServer(maxKeys: Int = 1000,
           else objects.synchronized {
             val (bad, ok) = keys.partition(failDeleteKeys.contains)
             ok.foreach(k => objects.remove(k))
-            batchDeletedKeys += ok.size
+            batchDeletedKeysN.addAndGet(ok.size)
             val errs = bad.map(k =>
               s"<Error><Key>${xmlEscape(k)}</Key><Code>InternalError</Code>" +
                 "<Message>injected per-key failure</Message></Error>").mkString
@@ -613,7 +626,7 @@ final class S3LiteServer(maxKeys: Int = 1000,
 
       // ---- multipart upload (the documented S3 MPU protocol) ----
       case ("POST", k) if hasBare("uploads") =>
-        posts += 1
+        postsN.incrementAndGet()
         val id = java.util.UUID.randomUUID().toString
         objects.synchronized {
           uploads.put(id, (k, scala.collection.mutable.TreeMap.empty))
@@ -635,7 +648,7 @@ final class S3LiteServer(maxKeys: Int = 1000,
         // parallel)
         val partDigest = md5digest(body)
         objects.synchronized {
-          puts += 1
+          putsN.incrementAndGet()
           partPutTries(pn) = partPutTries.getOrElse(pn, 0) + 1
           if (failPartNumbers409.contains(pn)) respond(ex, 409)
           else if (failPartNumbers400.contains(pn))
@@ -656,11 +669,11 @@ final class S3LiteServer(maxKeys: Int = 1000,
         }
 
       case ("POST", k) if q("uploadId").isDefined =>
-        posts += 1
+        postsN.incrementAndGet()
         completeMultipart(ex, k, q("uploadId").get, body)
 
       case ("DELETE", k) if q("uploadId").isDefined =>
-        deletes += 1
+        deletesN.incrementAndGet()
         objects.synchronized {
           uploads.remove(q("uploadId").get) match {
             case Some((uk, _)) if uk == k => respond(ex, 204)
@@ -670,7 +683,7 @@ final class S3LiteServer(maxKeys: Int = 1000,
           }
         }
       case ("GET", k) =>
-        gets += 1
+        getsN.incrementAndGet()
         objects.synchronized(objects.get(k)) match {
           case Some((b, e, _)) =>
             // Range: bytes=a-b (inclusive, as S3 serves) → 206 with the
@@ -680,11 +693,11 @@ final class S3LiteServer(maxKeys: Int = 1000,
               case Some(r) if r.startsWith("bytes=") =>
                 val Array(a, bEnd) = r.stripPrefix("bytes=").split("-", 2)
                 val start = a.toLong
-                if (start >= b.length) { range416s += 1; respond(ex, 416) }
+                if (start >= b.length) { range416sN.incrementAndGet(); respond(ex, 416) }
                 else {
                   val endIncl = if (bEnd.isEmpty) b.length - 1L
                     else math.min(bEnd.toLong, b.length - 1L)
-                  rangeGets += 1
+                  rangeGetsN.incrementAndGet()
                   // Content-Range with the total, as real S3 sends on
                   // every 206 — the prefetching reader plans its
                   // readahead from it (r19)
@@ -699,13 +712,13 @@ final class S3LiteServer(maxKeys: Int = 1000,
           case None => respond(ex, 404)
         }
       case ("HEAD", k) =>
-        heads += 1
+        headsN.incrementAndGet()
         objects.synchronized(objects.get(k)) match {
           case Some((_, e, _)) => respond(ex, 200, etag = Some(e))
           case None => respond(ex, 404)
         }
       case ("DELETE", k) =>
-        deletes += 1
+        deletesN.incrementAndGet()
         objects.synchronized(objects.remove(k))
         respond(ex, 204)
       case ("PUT", k) =>
@@ -718,7 +731,7 @@ final class S3LiteServer(maxKeys: Int = 1000,
         // store, which is what a real bucket's linearization point is)
         val e = md5(body)
         objects.synchronized {
-          puts += 1
+          putsN.incrementAndGet()
           if (failPuts > 0) { failPuts -= 1; respond(ex, 409) }
           else {
             val cur = objects.get(k)
