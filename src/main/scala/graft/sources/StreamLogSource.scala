@@ -6,6 +6,7 @@ import java.util.{Map => JMap}
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.distributions.{Distribution, Distributions}
@@ -19,8 +20,9 @@ import org.apache.spark.sql.sources.{DataSourceRegister, Filter, GreaterThan, Gr
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.util.SerializableConfiguration
 
-import graft.streamlog.{AuthSnapshot, MetaCommits, Offset, S3Auth, SegmentIntegrity, SegmentMeta, SegmentTasks, StreamStores}
+import graft.streamlog.{AuthSnapshot, MetaCommits, MetaLog, Offset, S3Auth, SegmentIntegrity, SegmentMeta, SegmentTasks, StreamStores}
 
 /** DataSource V2 batch connector for the stream-log:
   *
@@ -37,7 +39,14 @@ import graft.streamlog.{AuthSnapshot, MetaCommits, Offset, S3Auth, SegmentIntegr
   * (SURVEY.md §3): a consume-from-tail on a 100 TB stream plans only the
   * segments whose [first,last] range can intersect. One input partition
   * per segment preserves intra-segment order and parallelizes across
-  * segments.
+  * segments. On POSIX and `hadoop:` roots the session's Hadoop conf
+  * reaches the tasks as one broadcast per scan (per query for
+  * `readStream`), not inside every task ([[StreamLogReaderFactory]]).
+  *
+  * `spark.readStream.format("streamlog")` tails the log in micro-batches
+  * ([[StreamLogMicroBatch]]); a trigger reads the metadata log once:
+  * the replay behind `latestOffset` also answers `reportLatestOffset`
+  * and plans the batch.
   */
 class StreamLogSource extends TableProvider with DataSourceRegister {
 
@@ -314,7 +323,7 @@ class StreamLogScan(root: String, stream: String, lowerBound: String,
     StreamLogPartition.plan(root, stream, kept, lowerBound, "")
   }
 
-  private lazy val readerFactory = StreamLogReaderFactory.forActiveSession()
+  private lazy val readerFactory = StreamLogReaderFactory.forRoot(root)
   override def createReaderFactory(): PartitionReaderFactory = readerFactory
 
   /** Micro-batch view: the stream's cursor IS the record offset — the
@@ -360,12 +369,23 @@ class StreamLogMicroBatch(root: String, stream: String, startAfter: String,
   // draining wait for the next run.
   @volatile private var availableNowHorizon: Option[String] = None
 
+  // What the last latestOffset(start, limit) replayed. Spark calls
+  // reportLatestOffset() right after it and, for a batch with data,
+  // planInputPartitions: both answer from this state, so a trigger
+  // reads the metadata log once, not three times. A plan past it (the
+  // first batch after a restart) replays. A maintain() landing in
+  // between is harmless: the segments it merged stay readable until
+  // tombstone cleanup (a day by default), and the (after, until] cut
+  // keeps delivery exactly-once.
+  @volatile private var replayed: Option[MetaLog.State] = None
+
   override def initialOffset(): SOffset = StreamLogOffset(startAfter)
 
-  override def latestOffset(): SOffset = {
-    val st = StreamStores.replay(root, stream)
-    StreamLogOffset(if (st.lastOffset.isEmpty) Offset.Beginning else st.lastOffset)
-  }
+  private def live(st: MetaLog.State): String =
+    if (st.lastOffset.isEmpty) Offset.Beginning else st.lastOffset
+
+  override def latestOffset(): SOffset =
+    StreamLogOffset(live(StreamStores.replay(root, stream)))
 
   override def prepareForTriggerAvailableNow(): Unit =
     availableNowHorizon = Some(latestOffset().asInstanceOf[StreamLogOffset].last)
@@ -388,13 +408,14 @@ class StreamLogMicroBatch(root: String, stream: String, startAfter: String,
     case _ => (Long.MaxValue, Long.MaxValue)
   }
 
-  override def reportLatestOffset(): SOffset = latestOffset()
+  override def reportLatestOffset(): SOffset =
+    replayed.fold(latestOffset())(st => StreamLogOffset(live(st)))
 
   override def latestOffset(start: SOffset, limit: ReadLimit): SOffset = {
     val after = start.asInstanceOf[StreamLogOffset].last
     val st = StreamStores.replay(root, stream)
-    val live = if (st.lastOffset.isEmpty) Offset.Beginning else st.lastOffset
-    val horizon = availableNowHorizon.filter(_ < live).getOrElse(live)
+    replayed = Some(st)
+    val horizon = availableNowHorizon.filter(_ < live(st)).getOrElse(live(st))
     val (maxRows, maxBytes) = limitsOf(limit)
     if (maxRows == Long.MaxValue && maxBytes == Long.MaxValue)
       return StreamLogOffset(horizon)
@@ -424,14 +445,15 @@ class StreamLogMicroBatch(root: String, stream: String, startAfter: String,
     val after = start.asInstanceOf[StreamLogOffset].last
     val until = end.asInstanceOf[StreamLogOffset].last
     if (until == Offset.Beginning) return Array.empty
-    val st = StreamStores.replay(root, stream)
+    val st = replayed.filter(_.lastOffset >= until)
+      .getOrElse(StreamStores.replay(root, stream))
     val segs = st.index.segmentsAfter(after).filter(m => m.firstOffset <= until)
     StreamLogPartition.plan(root, stream, segs, after, until)
   }
 
-  // built ONCE per stream, not per micro-batch (a short-trigger query
-  // would otherwise pay a full Configuration copy every batch)
-  private lazy val readerFactory = StreamLogReaderFactory.forActiveSession()
+  // built ONCE per stream, not per micro-batch: one broadcast of the
+  // Hadoop conf serves every batch of the query
+  private lazy val readerFactory = StreamLogReaderFactory.forRoot(root)
   override def createReaderFactory(): PartitionReaderFactory = readerFactory
   override def commit(end: SOffset): Unit = () // cursor durability = Spark checkpoint
   override def stop(): Unit = ()
@@ -699,17 +721,19 @@ object StreamLogPartition {
 }
 
 /** Reads a [[StreamLogPartition]] and keeps its (after, until] rows.
-  * Carries the DRIVER's Hadoop configuration to the tasks: a bare
-  * `new Configuration()` there would ignore the `spark.hadoop.*` session
-  * properties that configure s3a credentials. */
-case class StreamLogReaderFactory(
-    conf: org.apache.spark.util.SerializableConfiguration)
+  * `conf` is the DRIVER's Hadoop configuration, broadcast once per scan
+  * ([[SegmentTasks.hadoopConf]]; None on `mem:` and `s3:` roots, whose
+  * partitions carry no path): a bare `new Configuration()` in the task
+  * would ignore the `spark.hadoop.*` session properties that configure
+  * s3a credentials, and a conf held by the factory itself would be
+  * deserialized again by every task. */
+case class StreamLogReaderFactory(conf: Option[Broadcast[SerializableConfiguration]])
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[StreamLogPartition]
     new PartitionReader[InternalRow] {
       private val lines = SegmentTasks.lines(p.root, p.stream, p.seg, p.sha256,
-          p.path, p.auth, conf.value)
+          p.path, p.auth, conf)
         .filter { l =>
           l.length >= Offset.Width && {
             val off = l.substring(0, Offset.Width)
@@ -730,8 +754,8 @@ case class StreamLogReaderFactory(
 }
 
 object StreamLogReaderFactory {
-  /** A factory carrying the active session's Hadoop conf. */
-  def forActiveSession(): StreamLogReaderFactory = StreamLogReaderFactory(
-    new org.apache.spark.util.SerializableConfiguration(
-      org.apache.spark.sql.SparkSession.active.sessionState.newHadoopConf()))
+  /** A factory for `root`'s scans, with the active session's Hadoop conf
+    * broadcast when the root's partitions carry paths. */
+  def forRoot(root: String): StreamLogReaderFactory = StreamLogReaderFactory(
+    SegmentTasks.hadoopConf(org.apache.spark.sql.SparkSession.active, root))
 }

@@ -322,9 +322,10 @@ final case class AuthSnapshot(endpoint: String, creds: SigV4Credentials,
   * fall back to unsigned requests. Every Spark task closure that
   * resolves an s3: store therefore CARRIES the driver's credentials
   * (captured at plan/factory-build time — [[SigV4Credentials]] is a
-  * serializable case class, the same shape as the Hadoop path's
-  * SerializableConfiguration) and calls [[ensureRegistered]] before
-  * resolving, so the registry self-populates on every executor. */
+  * small serializable case class, where the Hadoop path's ~110 KB conf
+  * is broadcast once per scan instead, [[SegmentTasks.hadoopConf]]) and
+  * calls [[ensureRegistered]] before resolving, so the registry
+  * self-populates on every executor. */
 object S3Auth {
   // an entry is either a frozen credential or a provider; the stamp is
   // the snapshot time it arrived with. Explicit entries (driver code /

@@ -6,8 +6,10 @@ import java.util.UUID
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.util.SerializableConfiguration
 
 /** Version-fencing rejection (the reference's HTTP 409;
   * /root/reference/src/stream_manager.ts:240-267). */
@@ -254,17 +256,17 @@ final class StreamLog(val spark: SparkSession, val root: String, val name: Strin
     version.foreach { v =>
       if (v < producerVersionVar) throw FencedException(v, producerVersionVar)
       if (v > producerVersionVar) {
-        producerVersionVar = v
         appendMeta(MetaJson.version(v))
+        producerVersionVar = v
       }
     }
     if (records.isEmpty) return Seq.empty
 
-    // monotonic epoch with clock-regression guard (ts:403-411)
+    // monotonic epoch with clock-regression guard (ts:403-411); a
+    // refused commit below leaves it advanced, which only skips offsets
     val now = nowMs()
     epoch = if (now <= epoch) epoch + 1 else now
     val offsets = records.indices.map(i => Offset.serialize(epoch, i.toLong))
-    lastOffsetVar = offsets.last
 
     val segName = s"${offsets.head}-${UUID.randomUUID()}.seg"
     // 32-char offset + '\n' + UTF-8 payload bytes (String.length would
@@ -277,8 +279,11 @@ final class StreamLog(val spark: SparkSession, val root: String, val name: Strin
     val meta = SegmentMeta(segName, offsets.head, offsets.last, nowMs(),
       records.size.toLong, bytes,
       sha256 = SegmentIntegrity.sha256Hex(contentBytes))
-    index = index.add(meta)
+    // the state takes the batch only once its commit landed: a fenced
+    // or failed publish leaves this handle reading what a fresh one reads
     appendMeta(MetaJson.add(meta))
+    index = index.add(meta)
+    lastOffsetVar = offsets.last
     flushMonitor.synchronized(flushMonitor.notifyAll())
     offsets
   }
@@ -296,7 +301,7 @@ final class StreamLog(val spark: SparkSession, val root: String, val name: Strin
     val segs = index.segmentsAfter(after)
     import spark.implicits._
     if (segs.isEmpty) return Seq.empty[(String, String)].toDF("offset", "data")
-    val df = rawLines(segs).select(
+    val df = rawLines(segs, SegmentTasks.hadoopConf(spark, root)).select(
       substring(col("value"), 1, Offset.Width).as("offset"),
       expr(s"substring(value, ${Offset.Width + 1})").as("data"))
     if (after == Offset.Beginning) df else df.filter(col("offset") > after)
@@ -305,17 +310,17 @@ final class StreamLog(val spark: SparkSession, val root: String, val name: Strin
   /** Raw segment lines as a one-column ("value") DataFrame: one task per
     * segment reads it with [[SegmentTasks.lines]], the DSv2 source's
     * reader too, so a flipped stored byte fails readAfter and compaction
-    * on every plane. The driver's S3 credentials and Hadoop conf ride
-    * the closure. */
-  private def rawLines(segs: Seq[SegmentMeta]): DataFrame = {
+    * on every plane. The driver's S3 credentials ride the closure; the
+    * Hadoop conf `conf`, broadcast once per read or merge
+    * ([[SegmentTasks.hadoopConf]]), rides it only as a handle. */
+  private def rawLines(segs: Seq[SegmentMeta],
+                       conf: Option[Broadcast[SerializableConfiguration]]): DataFrame = {
     import spark.implicits._
     val (r, n) = (root, name)
     val auth = StreamStores.s3AuthFor(root)
-    val conf = new org.apache.spark.util.SerializableConfiguration(
-      spark.sessionState.newHadoopConf())
     spark.createDataset(SegmentTasks.plan(segStore, segs))
       .repartition(segs.size)
-      .flatMap(s => SegmentTasks.lines(r, n, s.seg, s.sha256, s.path, auth, conf.value))
+      .flatMap(s => SegmentTasks.lines(r, n, s.seg, s.sha256, s.path, auth, conf))
       .toDF("value")
   }
 
@@ -433,8 +438,8 @@ final class StreamLog(val spark: SparkSession, val root: String, val name: Strin
     // of k DELETEs, r17); the purge lines append only after the
     // deletes land, same as the per-name loop did
     segStore.deleteMany(expired)
-    tombstones --= expired
     if (expired.nonEmpty) appendMeta(expired.map(MetaJson.purge): _*)
+    tombstones --= expired
     expired
   }
 
@@ -520,8 +525,9 @@ final class StreamLog(val spark: SparkSession, val root: String, val name: Strin
         bytes = w.map(_.bytes).sum)
     }
     val tmpDir = streamDir.resolve(s".merge-${UUID.randomUUID()}")
+    val conf = SegmentTasks.hadoopConf(spark, root) // one for all windows
     windows.zipWithIndex
-      .map { case (w, i) => rawLines(w).withColumn("wid", lit(i)) }
+      .map { case (w, i) => rawLines(w, conf).withColumn("wid", lit(i)) }
       .reduce(_ unionAll _) // CombineUnions flattens to one n-ary Union
       .repartition(windows.size, col("wid"))
       .sortWithinPartitions("wid", "value")
@@ -543,10 +549,10 @@ final class StreamLog(val spark: SparkSession, val root: String, val name: Strin
     stateLock.synchronized {
       val ts = nowMs()
       val all = windows.flatten
+      appendMeta(all.map(m => MetaJson.tombstone(m.name, ts)) ++ mergedWithSha.map(MetaJson.add): _*)
       all.foreach(m => index = index.remove(m))
       mergedWithSha.foreach(m => index = index.add(m))
       tombstones ++= all.map(_.name -> ts)
-      appendMeta(all.map(m => MetaJson.tombstone(m.name, ts)) ++ mergedWithSha.map(MetaJson.add): _*)
     }
     mergedWithSha
   }

@@ -124,6 +124,27 @@ class FirstAttemptCommitSpec extends SparkSpec {
     }
   }
 
+  test("a fenced publish or merge leaves the handle's state where a fresh handle's is: consume and lastOffset skip the refused records") {
+    withServer { (_, root) =>
+      val c = clock(8350000)
+      val a = new StreamLog(spark, root, "s1")
+      (1 to 2).foreach(i => a.publish(Seq(rec(i)), nowMs = c))
+      new StreamLog(spark, root, "s1").claimWriter()
+      intercept[WriterFencedException](a.publish(Seq(rec(3)), nowMs = c))
+      // a producer-version bump is refused the same way
+      intercept[WriterFencedException](a.publish(Seq(rec(4)), version = Some(5L), nowMs = c))
+      // and so is a merge, whose distributed job ran before the refused commit
+      intercept[WriterFencedException](a.compactOnce(nowMs = c))
+      val fresh = new StreamLog(spark, root, "s1")
+      assert(a.consume(Offset.Beginning, 100) == fresh.consume(Offset.Beginning, 100))
+      assert(a.consume(Offset.Beginning, 100).map(_._2) == Seq(rec(1), rec(2)))
+      assert(a.lastOffset == fresh.lastOffset)
+      assert(a.segments == fresh.segments && a.segments.size == 2)
+      assert(a.tombstoneNames.isEmpty && fresh.tombstoneNames.isEmpty)
+      assert(a.producerVersion == fresh.producerVersion && a.producerVersion == 0L)
+    }
+  }
+
   test("a first-attempt PUT whose response is dropped lands once more through the re-read and reads back exactly once") {
     WireFaultSerial.synchronized {
       withServer { (srv, root) =>

@@ -9,8 +9,10 @@ package graft.streamlog
   * (endpoint, creds) snapshot a [[graft.sources.StreamLogPartition]]
   * carries — exactly what a deserialized partition would hand a real
   * executor task. It builds the partition + reader directly
-  * (Spark-free: the reader factory's GET-fallback path needs no
-  * session) and prints the row count it streamed, signed.
+  * (Spark-free: an s3: scan's reader factory holds no Hadoop conf,
+  * which is broadcast once per scan only for path-bearing roots, so
+  * its GET path needs no session or context) and prints the row count
+  * it streamed, signed.
   *
   * args: endpoint bucket stream segmentName accessKey secretKey
   *       [sessionToken]
@@ -26,11 +28,9 @@ object FreshJvmReader {
     val p = graft.sources.StreamLogPartition(root, stream, seg,
       Offset.Beginning, "", None,
       Some(AuthSnapshot(endpoint, creds, System.currentTimeMillis())))
-    // the reader factory's Hadoop conf is only used for path-bearing
-    // partitions; the GET fallback (no path) never touches it
-    val factory = graft.sources.StreamLogReaderFactory(
-      new org.apache.spark.util.SerializableConfiguration(
-        new org.apache.hadoop.conf.Configuration()))
+    // an s3: scan's factory carries no Hadoop conf (it is broadcast only
+    // for path-bearing roots), so this one needs no Spark context either
+    val factory = graft.sources.StreamLogReaderFactory(conf = None)
     val reader = factory.createReader(p)
     var n = 0
     while (reader.next()) { reader.get(); n += 1 }

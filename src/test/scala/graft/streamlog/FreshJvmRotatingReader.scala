@@ -38,9 +38,7 @@ object FreshJvmRotatingReader {
     require(snap.provider.isDefined, "the snapshot must carry the provider")
     val p = graft.sources.StreamLogPartition(s"s3:$endpoint/$bucket", stream,
       seg, Offset.Beginning, "", None, Some(snap))
-    val factory = graft.sources.StreamLogReaderFactory(
-      new org.apache.spark.util.SerializableConfiguration(
-        new org.apache.hadoop.conf.Configuration()))
+    val factory = graft.sources.StreamLogReaderFactory(conf = None)
     val reader = factory.createReader(p)
     var n = 0
     while (reader.next()) { reader.get(); n += 1 }

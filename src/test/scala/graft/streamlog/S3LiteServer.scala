@@ -302,6 +302,10 @@ final class S3LiteServer(maxKeys: Int = 1000,
   @volatile var failDeleteKeys: Set[String] = Set.empty
   /** 403s issued by the SigV4 verifier (0 on a healthy signed run). */
   def authRejects: Int = authRejectsN.get
+  private val getsByKey =
+    new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.atomic.AtomicInteger]()
+  /** Object GETs of `key` (e.g. `s1/meta.jsonl`), Range GETs included. */
+  def getsOf(key: String): Int = Option(getsByKey.get(key)).fold(0)(_.get)
   /** Artificial per-request latency — loopback RTT is ~0, so overlap
     * effects (range readahead, parallel parts) need a simulated wire
     * delay to be measurable. Applied before any handler. */
@@ -684,6 +688,7 @@ final class S3LiteServer(maxKeys: Int = 1000,
         }
       case ("GET", k) =>
         getsN.incrementAndGet()
+        getsByKey.computeIfAbsent(k, _ => new java.util.concurrent.atomic.AtomicInteger).incrementAndGet()
         objects.synchronized(objects.get(k)) match {
           case Some((b, e, _)) =>
             // Range: bytes=a-b (inclusive, as S3 serves) → 206 with the
