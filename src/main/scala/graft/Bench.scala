@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: runs every SparkEntry query on SPARK_GRAFT_SF_DIR and
   * prints ONE JSON line {"metric":...,"queries":{name:sec}}.
   *
@@ -206,55 +204,10 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "5").toInt
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // Shuffle-writer choice (r20, measured): with R = cpus reduce
-      // partitions < the 200 default, EVERY no-map-side-combine shuffle
-      // routed through BypassMergeSortShuffleWriter — M×R per-partition
-      // files created per shuffle plus a transferTo concat whose
-      // mmap/munmap per block is kernel-lock-bound: 65% of q33's
-      // executor samples sat inside that writer (25% FileOutputStream
-      // .open0, 20% map0/unmap0), and simultaneous munmap TLB
-      // shootdowns across 32 threads are the intermittent 10-60×
-      // "contention" storms that poisoned the r2/r7/r17/r19 sidecars.
-      // At production scale reduce counts exceed 200, so the bypass
-      // writer never runs there — forcing the serialized sort writer
-      // (one file + index per map task) makes the local bench run the
-      // same writer a cluster would, it does not tune FOR local mode.
-      // Env-overridable to re-measure the old writer.
-      .config("spark.shuffle.sort.bypassMergeThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_BYPASS_THRESHOLD", "1"))
-      // Sorted-bucket scans (r20): ensureBucketedTables writes ONE
-      // key-sorted file per bucket (repartition on the bucket key), so
-      // the scan's outputOrdering is usable and the q19/q44 sort-merge
-      // joins drop their per-run re-Sorts (~10 s CPU each at sf0.1 —
-      // sorting both fact tables on every run). Spark reports bucket
-      // sort order only behind this flag since SPARK-28595 (the flag
-      // guards the multi-file-per-bucket case, which the one-file
-      // ingest layout rules out; with >1 file per bucket Spark still
-      // inserts the Sort — it checks the file count per bucket).
-      .config("spark.sql.legacy.bucketedTableScan.outputOrdering",
-        sys.env.getOrElse("SPARK_GRAFT_BUCKET_SORTED_SCAN", "true"))
-      // Codegen class cache (r20, measured): the default 100-entry
-      // cache cannot hold 84 queries × several codegen stages each, so
-      // EVERY pass re-Janino-compiled and re-JIT'd fresh anonymous
-      // classes — a quiet 2-pass full-registry profile showed C2
-      // compiler threads at 129 s process CPU, EQUAL to all executor
-      // task threads combined (128 s), plus ~105 s of GC churning the
-      // dead classes. A long-lived session serving a query fleet is
-      // exactly the 100 TB deployment shape; the cache just has to fit
-      // the fleet. (StaticSQLConf — must be set before session start.)
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "5000"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.local()
     spark.sparkContext.setLogLevel("WARN")
 
     // process CPU alongside wall time: machine contention during a bench

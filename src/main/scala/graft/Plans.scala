@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Writes PLANS.md: the formatted physical plan of each headline query at
   * the given SF — the audit trail for the scale claims (pushdown, pruned
   * schemas, broadcast vs sort-merge, codegen spans, exchange count).
@@ -231,17 +229,8 @@ adds a gated query (bench registry capped at 83).
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val outFile = args.lift(1).getOrElse("PLANS.md")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      // mirror graft.Bench's session (r20): the audit must show the plan
-      // the bench actually runs — sorted single-file-per-bucket scans
-      // drop the per-run Sorts under the q19/q44 sort-merge joins
-      .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // fixed width, so the plans' partition counts do not vary by host
+    val spark = Sessions.local(4)
     spark.sparkContext.setLogLevel("ERROR")
     val sb = new StringBuilder
     sb.append("# Physical plans (explain formatted)\n\n")

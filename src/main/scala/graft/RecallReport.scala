@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Measured-recall probe for the sign-bit LSH family at arbitrary
   * scale (r20 — VERDICT r19 #1: the sf10 wide-signature near-dup run
   * reported 6.79M pairs against an UNKNOWN denominator; this main puts
@@ -22,14 +20,7 @@ object RecallReport {
     val nBands = args(2).toInt
     val sampleMod = args(3).toInt
     val tau = if (args.length > 4) args(4).toDouble else 0.9
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.local()
     spark.sparkContext.setLogLevel("WARN")
     try {
       val emb = graft.core.Tables(spark, dir, "embeddings")

@@ -15,14 +15,7 @@ object Verify {
   def run(sfDir: String, outDir: String,
           queries: Map[String, (SparkSession, String) => org.apache.spark.sql.DataFrame],
           oracleSql: Map[String, String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.local()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // comma-separated allowlist for quick single-query oracle iteration

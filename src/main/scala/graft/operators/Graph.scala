@@ -37,9 +37,9 @@ import graft.core.Caches
   * lazily into ONE job instead of a job per round. PageRank's numeric
   * semantics are exact integer picounits ([[Pico]]/[[roundDivPos]],
   * r18 — the same longs fall out of the RDD kernel, the SQL twin, and
-  * the DuckDB oracle), and both algorithms are differentially tested
-  * against their retained DataFrame reference implementations on every
-  * spec run ([[round12]]/[[dec12]] remain as the general
+  * the DuckDB oracle), and the loops are differentially tested
+  * against DataFrame twins of themselves (`GraphSqlTwins`, in the test
+  * tree) on every spec run ([[round12]]/[[dec12]] remain as the general
   * round-replication kernels, property-tested in GraphSpec).
   *
   * Skew note: hash-partitioning edges by source vertex concentrates a
@@ -69,20 +69,13 @@ import graft.core.Caches
   * loops to one semantics, which is the maintenance guarantee that
   * matters.
   *
-  * Thread-safety note: [[withLoopParallelism]] (used only by the SQL
-  * reference implementations) narrows the session-global
-  * `spark.sql.shuffle.partitions` for the duration of a loop, and
-  * [[lastIters]] is one shared observability field — neither is safe
-  * under concurrent queries on one SparkSession. The gated-query and
-  * RDD-core paths touch neither; only the retained SQL oracles and
-  * specs do, and they run single-threaded.
+  * Thread-safety note: [[lastIters]] and the `lastCc*` fields are
+  * shared observability snapshots, last writer wins under concurrent
+  * calls. No loop reads them back to decide anything; the CC local
+  * finish gates on its own call's edge count.
   */
 object Graph {
 
-  /** Spark's `round(col, 12)` on a DOUBLE, replicated exactly
-    * (Round/BRound on DoubleType evaluate
-    * `BigDecimal.valueOf(x).setScale(scale, HALF_UP).doubleValue()`);
-    * property-tested bit-for-bit against the expression in GraphSpec. */
   /** Per-round fixpoint accounting from the most recent
     * [[connectedComponents]] run in this JVM (r20 — VERDICT r19 #3:
     * the sf10 q55 wall grew 12.7x against ~11x edges and the round
@@ -102,6 +95,10 @@ object Graph {
   @volatile private[graft] var lastCcEdges: Long = -1L
   @volatile private[graft] var lastCcParts: Int = -1
 
+  /** Spark's `round(col, 12)` on a DOUBLE, replicated exactly
+    * (Round/BRound on DoubleType evaluate
+    * `BigDecimal.valueOf(x).setScale(scale, HALF_UP).doubleValue()`);
+    * property-tested bit-for-bit against the expression in GraphSpec. */
   private[graft] def round12(x: Double): Double =
     java.math.BigDecimal.valueOf(x)
       .setScale(12, java.math.RoundingMode.HALF_UP).doubleValue()
@@ -159,7 +156,7 @@ object Graph {
                                        edges: RDD[(Long, Long)],
                                        part: HashPartitioner): DataFrame = {
     val t0 = System.nanoTime()
-    val es = edges.collect() // bounded: caller gated on lastCcEdges
+    val es = edges.collect() // bounded: caller gated on the counted edges
     val idx = new java.util.HashMap[Long, Integer]()
     val verts = new scala.collection.mutable.ArrayBuffer[Long]()
     es.foreach { case (s, d) =>
@@ -205,10 +202,10 @@ object Graph {
 
   /** Shared loop prep: the symmetrized, deduplicated edge set as a
     * pair RDD hash-partitioned by source vertex, persisted and
-    * registered with [[Caches]]. Materializes the result (one pass over
-    * the caller's upstream pair-detection plan) before dropping the
-    * temporary upstream cache. */
-  private def symmetrizedEdges(edges0: DataFrame): (RDD[(Long, Long)], HashPartitioner) = {
+    * registered with [[Caches]], and its exact row count. Materializes
+    * the result (one pass over the caller's upstream pair-detection
+    * plan) before dropping the temporary upstream cache. */
+  private def symmetrizedEdges(edges0: DataFrame): (RDD[(Long, Long)], HashPartitioner, Long) = {
     val spark = edges0.sparkSession
     val half = edges0
       .select(col("src").cast("long"), col("dst").cast("long"))
@@ -232,10 +229,9 @@ object Graph {
           val seen = new java.util.HashSet[(Long, Long)]()
           it.filter(seen.add)
         }, preservesPartitioning = true))
-    lastCcEdges = edges.count() // materialize before dropping the upstream cache
-    lastCcParts = part.numPartitions
+    val count = edges.count() // materialize before dropping the upstream cache
     half.unpersist(blocking = false)
-    (edges, part)
+    (edges, part, count)
   }
 
   /** Partitioner for the salted loops. Plain Long vertex keys hash
@@ -325,23 +321,6 @@ object Graph {
       else Iterator.single(((v, 0), x))
     }.partitionBy(part)
 
-  /** Run an iterative DataFrame loop with shuffle parallelism sized to
-    * its data: one shuffle partition per ~1M vertices, clamped to the
-    * session default (used by the retained SQL reference
-    * implementations). The session conf is restored in `finally`; safe
-    * because the loops execute eagerly inside `body`, so no lazy plan
-    * escapes with the narrowed setting. NOT safe under concurrent
-    * queries on the same session (it mutates the session-global conf) —
-    * only the single-threaded SQL reference impls and specs use it; see
-    * the object scaladoc. */
-  private def withLoopParallelism[T](df: DataFrame, n: Long)(body: => T): T = {
-    val spark = df.sparkSession
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    val parts = math.max(1L, math.min(prev.toLong, n / 1000000L + 1))
-    spark.conf.set("spark.sql.shuffle.partitions", parts.toString)
-    try body finally spark.conf.set("spark.sql.shuffle.partitions", prev)
-  }
-
   /** Connected components of an undirected graph given as (src, dst)
     * edge rows: returns (v, component) for every vertex that appears in
     * an edge, where component = the minimum vertex id reachable from v.
@@ -379,9 +358,11 @@ object Graph {
                           localEdgeLimit: Long = LocalEdgeLimit): DataFrame = {
     if (saltHubs > 1) return connectedComponentsSalted(edges0, maxIters, saltHubs)
     val spark = edges0.sparkSession
-    val (edges, part) = symmetrizedEdges(edges0)
+    val (edges, part, nEdges) = symmetrizedEdges(edges0)
+    lastCcEdges = nEdges
+    lastCcParts = part.numPartitions
     // Local finish (r20, guide §1.2 step 1): symmetrizedEdges has
-    // already COUNTED the deduped edge set (lastCcEdges — the count is
+    // already COUNTED the deduped edge set (nEdges — the count is
     // accounting the loop pays anyway), so when the whole graph is
     // provably small the O(log d) distributed rounds — each a fixed
     // 3-shuffle / 1-action job (~100 ms of pure scheduling at
@@ -392,8 +373,10 @@ object Graph {
     // converged min-label fixpoint (GraphSpec proves the two paths
     // equal on random graphs). At scale the distributed loop is
     // untouched; the gate just stops a near-empty tail graph from
-    // paying 10 scheduler round-trips.
-    if (lastCcEdges >= 0 && lastCcEdges <= localEdgeLimit)
+    // paying 10 scheduler round-trips. The gate reads this call's own
+    // count, never the JVM-global lastCcEdges another thread's call may
+    // have overwritten.
+    if (nEdges <= localEdgeLimit)
       return localConnectedComponents(spark, edges, part)
     // vertex set = edge keys (symmetric edges: every vertex is a src);
     // edges are partitioned BY KEY, so per-partition key dedup is
@@ -541,56 +524,11 @@ object Graph {
       StructType(Seq(StructField("v", LongType), StructField("component", LongType))))
   }
 
-  /** DataFrame reference implementation of [[connectedComponents]] —
-    * same algorithm, declared with joins/windows and localCheckpoint
-    * lineage barriers. Retained as the differential-testing oracle for
-    * the RDD core (GraphSpec asserts equality on every run); not used
-    * by any gated query. */
-  private[graft] def connectedComponentsSql(edges0: DataFrame, maxIters: Int = 50): DataFrame = {
-    val half = edges0.select(col("src").cast("long").as("src"),
-      col("dst").cast("long").as("dst"))
-    val edges = Caches.persist(
-      half.union(half.select(col("dst").as("src"), col("src").as("dst")))
-        .distinct())
-    var labels = edges.select(col("src").as("v")).distinct()
-      .select(col("v"), col("v").as("l"))
-      .localCheckpoint(true)
-    def labelSum(df: DataFrame): java.math.BigDecimal =
-      // sum over zero rows is SQL NULL — normalize so the empty graph
-      // converges (compareTo on null would NPE) like the RDD core does
-      Option(df.agg(sum(col("l").cast("decimal(38,0)"))).head().getDecimal(0))
-        .getOrElse(java.math.BigDecimal.ZERO)
-    var prev = labelSum(labels)
-    var it = 0
-    var done = false
-    withLoopParallelism(labels, labels.count()) {
-      while (!done && it < maxIters) {
-        val nbrMin = edges
-          .join(labels.select(col("v").as("dst"), col("l").as("nl")), "dst")
-          .groupBy(col("src")).agg(min(col("nl")).as("nl"))
-          .withColumnRenamed("src", "v")
-        val stepped = labels.join(nbrMin, Seq("v"), "left")
-          .select(col("v"), least(col("l"), coalesce(col("nl"), col("l"))).as("l"))
-          .persist()
-        val parents = stepped.select(col("v").as("pv"), col("l").as("pl"))
-        labels = stepped.join(parents, col("l") === col("pv"), "left")
-          .select(col("v"), least(col("l"), coalesce(col("pl"), col("l"))).as("l"))
-          .localCheckpoint(true)
-        stepped.unpersist(false)
-        val cur = labelSum(labels)
-        done = cur.compareTo(prev) == 0
-        prev = cur
-        it += 1
-      }
-    }
-    labels.select(col("v"), col("l").as("component"))
-  }
-
-  /** Fixpoint-check (and, for the SQL reference, checkpoint) cadence
+  /** Fixpoint-check (and, for the SQL twin, checkpoint) cadence
     * for [[pageRank]]: between probes the iterations chain lazily. */
-  private val CheckpointEvery = 3
+  private[graft] val CheckpointEvery = 3
 
-  /** Iterations the most recent [[pageRank]] / [[pageRankSql]] call
+  /** Iterations the most recent [[pageRank]] call
     * actually ran — spec observability for the early exit. */
   @volatile private[graft] var lastIters: Int = 0
 
@@ -647,7 +585,7 @@ object Graph {
                earlyExit: Boolean = true, saltHubs: Int = 1): DataFrame = {
     if (saltHubs > 1) return pageRankSalted(edges0, iters, damping, earlyExit, saltHubs)
     val spark = edges0.sparkSession
-    val (edges, part) = symmetrizedEdges(edges0)
+    val (edges, part, _) = symmetrizedEdges(edges0)
     // (v, outdeg): narrow — edges are already partitioned by src
     val deg = Caches.persistRdd(edges.mapValues(_ => 1L).reduceByKey(part, _ + _))
     val n = deg.count()
@@ -745,66 +683,6 @@ object Graph {
       outSchema)
   }
 
-  /** DataFrame reference implementation of [[pageRank]] — identical
-    * semantics declared with SQL expressions and localCheckpoint
-    * lineage barriers. Retained as the differential-testing oracle for
-    * the RDD core (GraphSpec asserts bit-identical ranks on every run);
-    * not used by any gated query. */
-  private[graft] def pageRankSql(edges0: DataFrame, iters: Int = 10, damping: Double = 0.85,
-                                 earlyExit: Boolean = true): DataFrame = {
-    val half = edges0.select(col("src").cast("long").as("src"),
-      col("dst").cast("long").as("dst"))
-    val edges = Caches.persist(
-      half.union(half.select(col("dst").as("src"), col("src").as("dst")))
-        .distinct())
-    val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
-    val edgesDeg = Caches.persist(edges.join(deg, "src"))
-    val verts = Caches.persist(deg.select(col("src").as("v"), col("outdeg")))
-    val n = verts.count()
-    if (n == 0) // mirror pageRank's empty-graph early return (the
-      // picounit divisions below would otherwise / by zero at plan time)
-      return verts.select(col("v"), col("outdeg").cast("long").as("degree"),
-        lit(0.0).as("pagerank"))
-    val (dNum, dDen) = dampingRational(damping)
-    val basep = roundDivPos((dDen - dNum) * Pico, dDen * n)
-    lastIters = 0
-    var ranks: DataFrame = null
-    withLoopParallelism(verts, n) {
-      // ranks as integer picounits throughout (see [[Pico]]): `div` is
-      // Spark SQL's integral division, so the whole loop is exact long
-      // arithmetic — the same longs as the RDD kernel and the oracle
-      ranks = verts.select(col("v"), lit(roundDivPos(Pico, n)).as("r"))
-        .localCheckpoint(true)
-      var converged = false
-      var i = 1
-      while (!converged && i <= iters) {
-        val contribs = edgesDeg
-          .join(ranks.select(col("v").as("src"), col("r")), "src")
-          .select(col("dst"),
-            expr("(2L * r + outdeg) div (2L * outdeg)").as("c"))
-          .groupBy(col("dst")).agg(sum(col("c")).as("s"))
-        val next = ranks.select(col("v"), col("r").as("r_prev"))
-          .join(contribs.withColumnRenamed("dst", "v"), Seq("v"), "left")
-          .select(col("v"),
-            expr(s"${basep}L + (2L * ${dNum}L * coalesce(s, 0L) + ${dDen}L) " +
-              s"div (2L * ${dDen}L)").as("r"),
-            col("r_prev"))
-        if (i == 1 || i % CheckpointEvery == 0 || i == iters) {
-          val checked = next.localCheckpoint(true)
-          converged = earlyExit && checked.filter(col("r") =!= col("r_prev")).isEmpty
-          ranks = checked.select(col("v"), col("r"))
-        } else {
-          ranks = next.select(col("v"), col("r"))
-        }
-        lastIters = i
-        i += 1
-      }
-    }
-    ranks.join(verts, "v")
-      .select(col("v"), col("outdeg").cast("long").as("degree"),
-        (col("r").cast("double") / lit(Pico.toDouble)).as("pagerank"))
-  }
-
   /** Community detection by SYNCHRONOUS label propagation (Raghavan,
     * Albert & Kumara 2007) — the third graph view the dedup pipeline
     * wants beside [[connectedComponents]] (which MERGES everything a
@@ -830,12 +708,12 @@ object Graph {
     * reduce, one narrow realignment join. Isolated vertices (none, by
     * construction — every vertex has an edge) and vertices whose
     * neighbors send nothing keep their label. Differentially tested
-    * against the retained DataFrame twin [[labelPropagationSql]].
+    * against its DataFrame twin (`GraphSqlTwins`, in the test tree).
     */
   def labelPropagation(edges0: DataFrame, iters: Int = 5): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
     val spark = edges0.sparkSession
-    val (edges, part) = symmetrizedEdges(edges0)
+    val (edges, part, _) = symmetrizedEdges(edges0)
     var labels: RDD[(Long, Long)] = Caches.persistRdd(
       edges.mapPartitions(it => {
         val seen = new java.util.HashSet[Long]()
@@ -866,39 +744,6 @@ object Graph {
     spark.createDataFrame(
       labels.map { case (v, l) => Row(v, l) },
       StructType(Seq(StructField("v", LongType), StructField("label", LongType))))
-  }
-
-  /** The one-loop DataFrame twin of [[labelPropagation]] — the
-    * differential oracle, never the shipped path (per-round plan
-    * re-analysis; see the object scaladoc). Same synchronous
-    * most-frequent/min-tie rule, argmax realized as max-count filter +
-    * min-label (no struct-ordering tricks, so it is obviously the same
-    * rule). */
-  private[graft] def labelPropagationSql(edges0: DataFrame, iters: Int = 5): DataFrame = {
-    val half = edges0.select(col("src").cast("long").as("src"),
-      col("dst").cast("long").as("dst"))
-    val edges = Caches.persist(
-      half.union(half.select(col("dst").as("src"), col("src").as("dst")))
-        .distinct())
-    var labels = Caches.persist(
-      edges.select(col("src").as("v")).distinct()
-        .select(col("v"), col("v").as("label")))
-    var it = 0
-    while (it < iters) {
-      val msgs = edges
-        .join(labels.select(col("v").as("src"), col("label")), "src")
-        .groupBy(col("dst"), col("label")).agg(count(lit(1)).as("cnt"))
-      val mx = msgs.groupBy(col("dst")).agg(max(col("cnt")).as("mc"))
-      val best = msgs.join(mx, "dst").filter(col("cnt") === col("mc"))
-        .groupBy(col("dst")).agg(min(col("label")).as("nl"))
-      val next = Caches.persist(
-        labels.join(best.withColumnRenamed("dst", "v"), Seq("v"), "left")
-          .select(col("v"), coalesce(col("nl"), col("label")).as("label")))
-      next.count()
-      labels = next
-      it += 1
-    }
-    labels
   }
 
   /** k-core decomposition at a fixed k (Seidman 1983; the distributed

@@ -6,14 +6,7 @@ import org.scalatest.BeforeAndAfterAll
 
 /** Shared local SparkSession for specs (one per JVM — sbt forks once). */
 object SparkSpec {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.Sessions.local(4)
 }
 
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {

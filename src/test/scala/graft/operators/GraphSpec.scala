@@ -206,14 +206,14 @@ class GraphSpec extends SparkSpec {
       val cc = try Graph.connectedComponents(df).collect()
         .map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq
       finally graft.core.Caches.release()
-      val ccRef = try Graph.connectedComponentsSql(df).collect()
+      val ccRef = try GraphSqlTwins.connectedComponentsSql(df).collect()
         .map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq
       finally graft.core.Caches.release()
       assert(cc == ccRef)
       val pr = try Graph.pageRank(df).collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).sortBy(_._1).toSeq
       finally graft.core.Caches.release()
-      val prRef = try Graph.pageRankSql(df).collect()
+      val prRef = try GraphSqlTwins.pageRankSql(df).collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).sortBy(_._1).toSeq
       finally graft.core.Caches.release()
       // bit-identical ranks, not approximately equal
@@ -230,7 +230,7 @@ class GraphSpec extends SparkSpec {
     val pr = try Graph.pageRank(pdf).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).sortBy(_._1).toSeq
     finally graft.core.Caches.release()
-    val prRef = try Graph.pageRankSql(pdf).collect()
+    val prRef = try GraphSqlTwins.pageRankSql(pdf).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).sortBy(_._1).toSeq
     finally graft.core.Caches.release()
     assert(pr == prRef)
@@ -319,7 +319,7 @@ class GraphSpec extends SparkSpec {
     val rddOut = try Graph.labelPropagation(g, iters = 3).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     finally graft.core.Caches.release()
-    val sqlOut = try Graph.labelPropagationSql(g, iters = 3).collect()
+    val sqlOut = try GraphSqlTwins.labelPropagationSql(g, iters = 3).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     finally graft.core.Caches.release()
     assert(rddOut == sqlOut)

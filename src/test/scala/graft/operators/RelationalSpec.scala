@@ -16,6 +16,23 @@ class RelationalSpec extends SparkSpec {
     w.toString
   }
 
+  /** Sort nodes under the first SortMergeJoin's children in the plan
+    * `df` ran with (call after an action: AQE's final plan). */
+  private def sortsUnderSmj(df: org.apache.spark.sql.DataFrame): Seq[String] = {
+    import org.apache.spark.sql.execution.{SortExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.joins.SortMergeJoinExec
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => nodes(q.plan)
+      case _ => p.children.flatMap(nodes)
+    })
+    val smj = nodes(df.queryExecution.executedPlan)
+      .collectFirst { case j: SortMergeJoinExec => j }
+    assert(smj.isDefined, s"expected a sort-merge join:\n${df.queryExecution.executedPlan}")
+    smj.get.children.flatMap(nodes).collect { case s: SortExec => s.simpleString(200) }
+  }
+
   test("q02: filter and projection reach the parquet scan") {
     val plan = formattedPlan(Relational.q02FilterProject(spark, sfDir))
     assert(plan.contains("PushedFilters:") && plan.contains("GreaterThanOrEqual(l_quantity"),
@@ -61,6 +78,10 @@ class RelationalSpec extends SparkSpec {
     assert(!joinSubtree.contains("Exchange"),
       s"join inputs must be co-located (no Exchange below the SMJ):\n$plan")
     assert(plan.contains("Bucketed: true"), s"scans must be bucketed:\n$plan")
+    // one sorted file per bucket: the scans already deliver the join
+    // order, so the plan the bench times re-sorts neither side
+    assert(sortsUnderSmj(bucketed).isEmpty,
+      s"sorted bucket scans must feed the SMJ without a Sort:\n$plan")
   }
 
   test("q44: bucketed star matches q05; fact join co-located through the broadcast") {
@@ -76,6 +97,8 @@ class RelationalSpec extends SparkSpec {
     val subtree = plan.substring(joinPos)
     assert(!subtree.replace("BroadcastExchange", "").contains("Exchange"),
       s"fact join inputs must be co-located:\n$plan")
+    assert(sortsUnderSmj(star).isEmpty,
+      s"sorted bucket scans must feed the SMJ without a Sort:\n$plan")
   }
 
   test("bucketed tables are reused across operators: groupBy on the bucket key has no Exchange") {

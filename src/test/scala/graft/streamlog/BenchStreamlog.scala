@@ -524,11 +524,7 @@ object BenchStreamlog {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Sessions.local()
     spark.sparkContext.setLogLevel("WARN")
     try {
       // one warm pass so JVM/HTTP-stack warm-up isn't billed to the

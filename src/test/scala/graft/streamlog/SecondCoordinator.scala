@@ -1,7 +1,5 @@
 package graft.streamlog
 
-import org.apache.spark.sql.SparkSession
-
 /** Test fixture: a SEPARATE PROCESS acting as a full second
   * COORDINATOR over the signed wire — the [[FreshJvmReader]] pattern
   * widened from one executor read to the whole write-side lifecycle
@@ -31,11 +29,7 @@ object SecondCoordinator {
       "this fixture must start with an empty credential registry")
     S3Auth.register(endpoint, SigV4Credentials(ak, sk,
       sessionToken = args.toSeq.drop(5).headOption.filter(_.nonEmpty)))
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.shuffle.partitions", 2)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Sessions.local(2)
     spark.sparkContext.setLogLevel("ERROR")
     try {
       val log = new StreamLog(spark, s"s3:$endpoint/$bucket", stream)
