@@ -1,7 +1,5 @@
 package graft.sources
 
-import java.nio.charset.StandardCharsets.UTF_8
-import java.nio.file.Files
 import java.util.{Map => JMap}
 
 import scala.jdk.CollectionConverters._
@@ -22,7 +20,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.SerializableConfiguration
 
-import graft.streamlog.{AuthSnapshot, MetaCommits, MetaLog, Offset, S3Auth, SegmentIntegrity, SegmentMeta, SegmentTasks, StreamStores}
+import graft.streamlog.{AuthSnapshot, MetaCommits, MetaLog, Offset, SegmentCommit, SegmentMeta, SegmentTasks, SegmentWriter, StreamStores}
 
 /** DataSource V2 batch connector for the stream-log:
   *
@@ -510,10 +508,6 @@ class StreamLogWriteBuilder(root: String, stream: String,
   }
 }
 
-case class SegmentCommit(name: String, firstOffset: String, lastOffset: String,
-                         records: Long, bytes: Long,
-                         sha256: String = "") extends WriterCommitMessage
-
 /** Structured Streaming sink for the stream log — exactly-once,
   * offset-assigning, fenced: the native `writeStream.format("streamlog")`
   * path that retires foreachBatch from the produce side.
@@ -567,15 +561,16 @@ case class StreamLogStreamingWriterFactory(root: String, stream: String, base: L
   private val PartitionStride = 10000000000L
 
   override def createWriter(partitionId: Int, taskId: Long,
-                            epochId: Long): DataWriter[InternalRow] =
-    new SegmentWriter(root, stream, s"s-$partitionId-$taskId-$epochId", auth, dataCol = 0) {
-      private val epoch = base + epochId
-      override protected def offsetOf(row: InternalRow): String = {
-        require(written < PartitionStride,
-          s"partition $partitionId exceeded $PartitionStride rows in one epoch")
-        Offset.serialize(epoch, partitionId * PartitionStride + written)
-      }
-    }
+                            epochId: Long): DataWriter[InternalRow] = {
+    val w = new SegmentWriter(SegmentTasks.store(root, stream, auth),
+      s"s-$partitionId-$taskId-$epochId")
+    val epoch = base + epochId
+    new SegmentDataWriter(w, dataCol = 0, _ => {
+      require(w.records < PartitionStride,
+        s"partition $partitionId exceeded $PartitionStride rows in one epoch")
+      Offset.serialize(epoch, partitionId * PartitionStride + w.records)
+    })
+  }
 }
 
 class StreamLogBatchWrite(root: String, stream: String,
@@ -603,70 +598,19 @@ case class StreamLogWriterFactory(root: String, stream: String,
                                   auth: Option[AuthSnapshot] = None)
     extends DataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    new SegmentWriter(root, stream, s"w-$partitionId-$taskId", auth, dataCol = 1) {
-      override protected def offsetOf(row: InternalRow): String = {
-        val off = row.getUTF8String(0).toString
-        require(off.length == Offset.Width, s"bad offset '$off'")
-        require(lastOffset.forall(_ < off), s"unsorted offsets: ${lastOffset.orNull} then $off")
-        off
-      }
-    }
+    new SegmentDataWriter(new SegmentWriter(SegmentTasks.store(root, stream, auth),
+      s"w-$partitionId-$taskId"), dataCol = 1, _.getUTF8String(0).toString)
 }
 
-/** The one DSv2 segment writer behind both write paths: a task spools
-  * `offset ++ data ++ '\n'` lines, digests the spooled bytes as it goes
-  * (no re-read at commit) and puts the spool as one segment. The
-  * factories say only where a row's offset comes from ([[offsetOf]]). */
-private[sources] abstract class SegmentWriter(root: String, stream: String,
-                                              spoolHint: String,
-                                              auth: Option[AuthSnapshot],
-                                              dataCol: Int)
+/** Both write paths' DSv2 task: each row's data goes to the shared
+  * [[SegmentWriter]] at the offset `offsetOf` reads or assigns. */
+private[sources] final class SegmentDataWriter(w: SegmentWriter, dataCol: Int,
+                                               offsetOf: InternalRow => String)
     extends DataWriter[InternalRow] {
-  auth.foreach(S3Auth.ensureRegistered)
-  private val store = StreamStores.segmentStore(root, stream)
-  private val tmp = store.newSpool(spoolHint)
-  private lazy val out = Files.newBufferedWriter(tmp, UTF_8)
-  private val md = java.security.MessageDigest.getInstance("SHA-256")
-  private var first: String = _
-  private var last: String = _
-  private var records = 0L
-  private var bytes = 0L
-
-  protected def written: Long = records
-  protected def lastOffset: Option[String] = Option(last)
-  /** This row's offset — assigned or read from the row, and validated. */
-  protected def offsetOf(row: InternalRow): String
-
-  override def write(row: InternalRow): Unit = {
-    val off = offsetOf(row)
-    val data = row.getUTF8String(dataCol).toString
-    require(!data.contains('\n') && !data.contains('\r'),
-      "records must not contain newlines (NDJSON segment format)")
-    if (first == null) first = off
-    last = off
-    out.write(off); out.write(data); out.write("\n")
-    val dataBytes = data.getBytes(UTF_8)
-    md.update(off.getBytes(UTF_8)); md.update(dataBytes); md.update('\n'.toByte)
-    records += 1
-    bytes += Offset.Width + 1L + dataBytes.length
-  }
-
-  override def commit(): WriterCommitMessage = {
-    if (records == 0) {
-      // the default newSpool creates the file eagerly: don't leak it
-      Files.deleteIfExists(tmp)
-      return SegmentCommit("", "", "", 0L, 0L)
-    }
-    out.close()
-    val name = s"$first-${java.util.UUID.randomUUID()}.seg"
-    store.putFromFile(name, tmp)
-    SegmentCommit(name, first, last, records, bytes, SegmentIntegrity.hex(md))
-  }
-
-  override def abort(): Unit = {
-    try out.close() catch { case _: Throwable => () }
-    Files.deleteIfExists(tmp)
-  }
+  override def write(row: InternalRow): Unit =
+    w.write(offsetOf(row), row.getUTF8String(dataCol).toString)
+  override def commit(): WriterCommitMessage = w.commit()
+  override def abort(): Unit = w.abort()
   override def close(): Unit = ()
 }
 

@@ -11,8 +11,8 @@ import java.nio.charset.StandardCharsets.UTF_8
   * also ship) and [[S3SegmentStore]] speaks put/get/delete +
   * cursor-paginated ListObjectsV2, against any S3-compatible HTTP
   * endpoint. A stream rooted at `s3:<endpoint>/<bucket>` keeps NOTHING
-  * on the local filesystem beyond compaction's Spark staging scratch:
-  * the metadata log and every segment byte live in the bucket, and all
+  * on the local filesystem beyond a writing task's spool file: the
+  * metadata log and every segment byte live in the bucket, and all
   * cross-writer correctness rides the If-Match tag compare exactly as
   * [[MetaStore]]'s contract states.
   *

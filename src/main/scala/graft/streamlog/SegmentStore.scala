@@ -360,9 +360,9 @@ object StreamStores {
     }
   }
 
-  /** A root whose stream state lives OUTSIDE the local streamDir
-    * (bucket sim, S3 endpoint, or Hadoop URI) — the local streamDir is
-    * then only compaction's Spark staging scratch. */
+  /** A root whose stream state lives in its stores, not in a local
+    * directory (bucket sim, S3 endpoint, or Hadoop URI): such a stream
+    * has no [[StreamLog.streamDir]]. */
   def isBucket(root: String): Boolean = isMem(root) || isS3(root) || isHadoop(root)
 
   /** The DRIVER's credentials for an s3: root, as a plan-time
@@ -519,8 +519,8 @@ object StreamStores {
 
   /** Does `stream` have committed state under `root`? Scheme-aware
     * (the fleet sweep's liveness check — replaces the POSIX-only
-    * `Files.isDirectory(streamDir)`, which on a bucket root pointed at
-    * local scratch and made every bucket stream look destroyed):
+    * `Files.isDirectory(streamDir)`; a bucket-rooted stream has no
+    * local directory, so that check made every one look destroyed):
     *   - mem: a REGISTRY PEEK, never `computeIfAbsent` — probing a name
     *     destroy just dropped must not resurrect a phantom registry
     *     entry (r15 review: one leaked pair per churned name forever),

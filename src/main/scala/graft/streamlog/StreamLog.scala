@@ -6,10 +6,8 @@ import java.util.UUID
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.util.SerializableConfiguration
 
 /** Version-fencing rejection (the reference's HTTP 409;
   * /root/reference/src/stream_manager.ts:240-267). */
@@ -45,8 +43,8 @@ final case class WriterFencedException(provided: Long, current: Long)
   * metadata index prunes segments BEFORE Spark lists files, so a consume
   * at offset X scans only segments with lastOffset > X (the analog of
   * partition pruning). Appends are driver-side (a batch is small, in-memory
-  * — same as the reference's pendingMessages buffer); compaction merges are
-  * distributed Spark sorts, never a driver loop over records.
+  * — same as the reference's pendingMessages buffer); a compaction merge
+  * runs in Spark tasks, one per window, never a driver loop over records.
   *
   * Single-writer per stream (the reference serializes through one DO).
   */
@@ -56,17 +54,14 @@ final class StreamLog(val spark: SparkSession, val root: String, val name: Strin
 
   private val bucketRooted = StreamStores.isBucket(root)
 
-  /** Local working directory: the stream's home on a POSIX root; for a
-    * bucket-rooted stream (mem: sim or s3: endpoint), a temp scratch
-    * area that holds only compaction's distributed-write staging —
-    * segment bytes and the metadata log live in the stores, never here. */
-  val streamDir: Path =
-    if (bucketRooted)
-      Paths.get(sys.props("java.io.tmpdir"), "graft-mem-scratch",
-        (root + "-" + name).replaceAll("[^A-Za-z0-9._-]", "_"))
-    else Paths.get(root, name)
-  val segmentDir: Path = streamDir.resolve("segments")
-  private val metaPath: Path = streamDir.resolve("meta.jsonl")
+  /** The stream's directory on a POSIX root (`segments/`,
+    * `meta.jsonl`). A bucket root (`mem:`, `s3:`, `hadoop:`) keeps both
+    * in its stores and has no local directory, so this throws there. */
+  lazy val streamDir: Path = {
+    require(!bucketRooted, s"a stream on the bucket root $root has no local directory")
+    Paths.get(root, name)
+  }
+  lazy val segmentDir: Path = streamDir.resolve("segments")
 
   /** The metadata log's storage backend — conditional append
     * ([[MetaStore]]). POSIX by default; specs pass an [[InMemoryMetaStore]]
@@ -109,9 +104,9 @@ final class StreamLog(val spark: SparkSession, val root: String, val name: Strin
     * of a stream's operations on one event loop, and
     * [[startMaintenance]] re-creates the same hazard here — its daemon
     * thread compacts while the owner thread publishes. Mutations hold
-    * this lock; compaction's DISTRIBUTED merge runs outside it (only
-    * the window snapshot and the final apply lock), so a publish is
-    * never blocked behind a Spark job. Reentrant (JVM monitor). */
+    * this lock; compaction's merge job runs outside it (only the window
+    * snapshot and the final apply lock), so a publish is never blocked
+    * behind a Spark job. Reentrant (JVM monitor). */
   private val stateLock = new Object
 
   load()
@@ -301,28 +296,22 @@ final class StreamLog(val spark: SparkSession, val root: String, val name: Strin
     val segs = index.segmentsAfter(after)
     import spark.implicits._
     if (segs.isEmpty) return Seq.empty[(String, String)].toDF("offset", "data")
-    val df = rawLines(segs, SegmentTasks.hadoopConf(spark, root)).select(
-      substring(col("value"), 1, Offset.Width).as("offset"),
-      expr(s"substring(value, ${Offset.Width + 1})").as("data"))
+    // one task per segment reads it with SegmentTasks.lines, the DSv2
+    // reader too; the Hadoop conf rides the closure only as a broadcast
+    val (r, n, auth, conf) = (root, name, StreamStores.s3AuthFor(root),
+      SegmentTasks.hadoopConf(spark, root))
+    val df = tasks(SegmentTasks.plan(segStore, segs))
+      .flatMap(s => SegmentTasks.lines(r, n, s.seg, s.sha256, s.path, auth, conf))
+      .select(
+        substring(col("value"), 1, Offset.Width).as("offset"),
+        expr(s"substring(value, ${Offset.Width + 1})").as("data"))
     if (after == Offset.Beginning) df else df.filter(col("offset") > after)
   }
 
-  /** Raw segment lines as a one-column ("value") DataFrame: one task per
-    * segment reads it with [[SegmentTasks.lines]], the DSv2 source's
-    * reader too, so a flipped stored byte fails readAfter and compaction
-    * on every plane. The driver's S3 credentials ride the closure; the
-    * Hadoop conf `conf`, broadcast once per read or merge
-    * ([[SegmentTasks.hadoopConf]]), rides it only as a handle. */
-  private def rawLines(segs: Seq[SegmentMeta],
-                       conf: Option[Broadcast[SerializableConfiguration]]): DataFrame = {
-    import spark.implicits._
-    val (r, n) = (root, name)
-    val auth = StreamStores.s3AuthFor(root)
-    spark.createDataset(SegmentTasks.plan(segStore, segs))
-      .repartition(segs.size)
-      .flatMap(s => SegmentTasks.lines(r, n, s.seg, s.sha256, s.path, auth, conf))
-      .toDF("value")
-  }
+  /** `units` as a Dataset with one task per element and no exchange:
+    * a segment for [[readAfter]], a window for [[compactAll]]. */
+  private def tasks[T](units: Seq[T])(implicit enc: Encoder[T]): Dataset[T] =
+    spark.createDataset(spark.sparkContext.parallelize(units, units.size)(enc.clsTag))
 
   /** Driver-side consume: exclusive-start offset, in-order, limited —
     * the reference's getMessagesFromOffset with segment chaining
@@ -459,20 +448,7 @@ final class StreamLog(val spark: SparkSession, val root: String, val name: Strin
     */
   def purgeOrphans(graceMs: Long = 300000L): Seq[String] = stateLock.synchronized {
     load() // pick up commits from external writers (e.g. DSv2 bulk load)
-    // stale merge scratch: a crash between a compaction's distributed
-    // write and its cleanup leaves a .merge-<uuid> directory that
-    // nothing else ever reclaims (ADVICE r2); same grace period — an
-    // IN-FLIGHT merge's directory is younger than the cutoff
     val cutoff = System.currentTimeMillis() - graceMs
-    val staleMerges =
-      if (!Files.isDirectory(streamDir)) Seq.empty
-      else listDir(streamDir)
-        .filter { p =>
-          p.getFileName.toString.startsWith(".merge-") &&
-            Files.getLastModifiedTime(p).toMillis <= cutoff
-        }
-        .sortBy(_.getFileName.toString)
-    staleMerges.foreach(deleteRecursively)
     val referenced = index.segments.map(_.name).toSet ++ tombstones.keySet
     // the store's LIST (bucket ListObjects / POSIX dirlist) is the
     // discovery mechanism; the grace window tolerates eventual LIST
@@ -487,23 +463,27 @@ final class StreamLog(val spark: SparkSession, val root: String, val name: Strin
     // crash-leaked unique tmp staging is invisible to list() by design
     // — the store's own debris sweep collects it past the same grace
     val debris = segStore.sweepDebris(graceMs, System.currentTimeMillis())
-    orphans ++ staleMerges.map(_.getFileName.toString) ++ debris
+    orphans ++ debris
   }
 
-  /** Compact EVERY window of one planning pass in a single distributed
-    * Spark job: each window's files are read, tagged with a window id,
-    * repartitioned so a window is exactly one partition, sorted, and
-    * written out per-window via partitionBy — so a 10 000-segment
-    * backlog costs one job per PASS, not one job per window. The merge
-    * is a distributed sort, never a driver loop over records; offsets
-    * are the 32-char line prefix, so sorting whole lines == sorting by
-    * offset, and a window's output is bounded (< 2*MaxBytes).
+  /** Compact EVERY window of one planning pass in one Spark job of one
+    * stage, one task per window: a window is a contiguous run of the
+    * sorted, non-overlapping live segments, so its task writes its
+    * inputs' lines in order through [[SegmentWriter]] (ts:521-609,
+    * kway.ts:7-55: the ordered concat of contiguous sorted segments) and
+    * puts the merged segment itself, through this handle's segment store
+    * when it runs in this JVM ([[SegmentTasks.lend]]). No shuffle, no
+    * sort, no staging.
     *
-    * Plan width is CAPPED at `maxWindowsPerJob` windows per job: a
-    * genuine cold-start backlog would otherwise build a driver plan
-    * with thousands of scan nodes (VERDICT r2). Oldest windows go
-    * first; the [[maintain]] loop already re-plans until the planner
-    * is empty, so a capped pass just becomes several bounded jobs.
+    * A job takes at most `maxWindowsPerJob` windows, oldest first, which
+    * bounds one job's tasks and one metadata commit's lines; the
+    * [[maintain]] loop re-plans until the planner is empty, so a capped
+    * pass just becomes several bounded jobs.
+    *
+    * Before committing, each window's merged segment must carry exactly
+    * its inputs' offset range and record count; if one disagrees, the
+    * job commits nothing and throws, and the segments its tasks put are
+    * orphans for [[purgeOrphans]].
     * @return merged segment metadata, oldest-first; empty when the
     *         planner finds nothing.
     */
@@ -515,46 +495,31 @@ final class StreamLog(val spark: SparkSession, val root: String, val name: Strin
       Compaction.windows(index.segments, limits).take(maxWindowsPerJob))
     if (windows.isEmpty) return Seq.empty
 
-    val merged = windows.map { w =>
-      SegmentMeta(
-        name = s"${w.head.firstOffset}-${UUID.randomUUID()}.seg",
-        firstOffset = w.head.firstOffset,
-        lastOffset = w.last.lastOffset,
-        createdMS = nowMs(),
-        records = w.map(_.records).sum,
-        bytes = w.map(_.bytes).sum)
+    import spark.implicits._
+    val (r, n, auth, conf) = (root, name, StreamStores.s3AuthFor(root),
+      SegmentTasks.hadoopConf(spark, root))
+    val commits = SegmentTasks.lend(segStore)(key =>
+      tasks(windows.map(SegmentTasks.plan(segStore, _)))
+        .map(w => SegmentTasks.merge(r, n, w, auth, conf, key))
+        .collect())
+    val merged = windows.zip(commits).map { case (w, c) =>
+      val want = (w.head.firstOffset, w.last.lastOffset, w.map(_.records).sum)
+      if ((c.firstOffset, c.lastOffset, c.records) != want)
+        throw new IllegalStateException(s"merge of ${w.map(_.name).mkString(", ")} " +
+          s"wrote ${c.name} holding ${(c.firstOffset, c.lastOffset, c.records)}, " +
+          s"but the window's metadata says $want (first, last, records); nothing committed")
+      SegmentMeta(c.name, c.firstOffset, c.lastOffset, nowMs(), c.records, c.bytes, c.sha256)
     }
-    val tmpDir = streamDir.resolve(s".merge-${UUID.randomUUID()}")
-    val conf = SegmentTasks.hadoopConf(spark, root) // one for all windows
-    windows.zipWithIndex
-      .map { case (w, i) => rawLines(w, conf).withColumn("wid", lit(i)) }
-      .reduce(_ unionAll _) // CombineUnions flattens to one n-ary Union
-      .repartition(windows.size, col("wid"))
-      .sortWithinPartitions("wid", "value")
-      .write.partitionBy("wid").mode("overwrite").text(tmpDir.toString)
-    val mergedWithSha = merged.indices.map { i =>
-      val widDir = tmpDir.resolve(s"wid=$i")
-      val part = listDir(widDir).filter(_.getFileName.toString.startsWith("part-")) match {
-        case Seq(p) => p
-        case ps => throw new IllegalStateException(s"expected 1 part file for wid=$i, got $ps")
-      }
-      // digest the spool BEFORE putFromFile consumes it (one streaming
-      // pass; the commit's add entry records it for future readers)
-      val sha = S3Http.sha256HexOfFile(part)
-      segStore.putFromFile(merged(i).name, part)
-      merged(i).copy(sha256 = sha)
-    }
-    deleteRecursively(tmpDir)
 
     stateLock.synchronized {
       val ts = nowMs()
       val all = windows.flatten
-      appendMeta(all.map(m => MetaJson.tombstone(m.name, ts)) ++ mergedWithSha.map(MetaJson.add): _*)
+      appendMeta(all.map(m => MetaJson.tombstone(m.name, ts)) ++ merged.map(MetaJson.add): _*)
       all.foreach(m => index = index.remove(m))
-      mergedWithSha.foreach(m => index = index.add(m))
+      merged.foreach(m => index = index.add(m))
       tombstones ++= all.map(_.name -> ts)
     }
-    mergedWithSha
+    merged
   }
 
   /** One full maintenance pass — the library-side analog of the
@@ -667,8 +632,8 @@ final class StreamLog(val spark: SparkSession, val root: String, val name: Strin
     * with fresh state (ts:722-758). */
   def destroy(): Unit = stateLock.synchronized {
     segStore.deleteAll()
-    if (Files.exists(streamDir)) deleteRecursively(streamDir)
-    store.clear() // non-POSIX backends hold the log outside streamDir
+    if (!bucketRooted && Files.exists(streamDir)) deleteRecursively(streamDir)
+    store.clear() // bucket roots hold the log in the store
     segStore.dropContainer() // hierarchical schemes: drop the empty dirs
     load()
   }

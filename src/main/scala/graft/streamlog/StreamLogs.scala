@@ -134,8 +134,8 @@ object StreamLogs {
 
     /** Is the stream's state still present? POSIX: its directory
       * (cheap stat, the pre-r15 check); bucket roots: the storage
-      * seams — the streamDir there is local scratch, which would make
-      * every bucket stream look destroyed. Takes only the NAME (r15
+      * seams — a bucket stream has no local directory, so a stat
+      * would make every one look destroyed. Takes only the NAME (r15
       * review, second pass): probing liveness must not construct a
       * handle first, because a StreamLog constructor re-resolves its
       * stores and on a mem: root that `computeIfAbsent` would

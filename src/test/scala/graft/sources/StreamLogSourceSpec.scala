@@ -3,7 +3,7 @@ package graft.sources
 import java.nio.file.Files
 
 import graft.SparkSpec
-import graft.streamlog.{Offset, StreamLog}
+import graft.streamlog.{Offset, SegmentCommit, StreamLog}
 
 /** DataSource V2 connector: `format("streamlog")` reads, offset-filter
   * pushdown prunes segments at planning time, order/content parity with

@@ -7,7 +7,7 @@ import java.util.concurrent.atomic.AtomicInteger
 import scala.collection.mutable.ArrayBuffer
 
 import org.apache.hadoop.fs.{FSDataInputStream, LocalFileSystem, Path}
-import org.apache.spark.sql.catalyst.plans.logical.MapPartitions
+import org.apache.spark.sql.catalyst.plans.logical.{MapElements, MapPartitions}
 import org.apache.spark.sql.connector.read.InputPartition
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.util.QueryExecutionListener
@@ -68,10 +68,13 @@ class TriggerCostSpec extends SparkSpec {
     bytes.size
   }
 
-  /** The per-segment reading closures of a plan ([[StreamLog]]'s
-    * rawLines, shared by readAfter and compaction). */
+  /** The task closures of a plan: [[StreamLog.readAfter]]'s segment
+    * reader and compaction's window merge. */
   private def closures(qe: QueryExecution): Seq[AnyRef] =
-    qe.analyzed.collect { case m: MapPartitions => m.func: AnyRef }
+    qe.analyzed.collect {
+      case m: MapPartitions => m.func: AnyRef
+      case m: MapElements => m.func
+    }
 
   test("a trigger reads the metadata log once: reportLatestOffset and planInputPartitions reuse latestOffset's replay") {
     withServer { (srv, root) =>

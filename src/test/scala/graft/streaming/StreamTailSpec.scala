@@ -90,7 +90,7 @@ class StreamTailSpec extends SparkSpec {
 
   test("tail and appendBatch address the log's own stream on a mem: root") {
     import spark.implicits._
-    // a bucket-rooted log's streamDir is local scratch, not its root:
+    // a bucket-rooted log has no local directory to hand on:
     // both directions must resolve the stream from log.root
     val log = new StreamLog(spark, s"mem:tail-${java.util.UUID.randomUUID()}", "s")
     log.publish(Seq(ev(60000, 1, 1.0), ev(61000, 2, 2.0)))

@@ -58,6 +58,7 @@ class BucketStreamLogSpec extends SparkSpec {
   }
 
   test("publish/consume/poll round-trip with zero segment files on disk") {
+    val local = LocalLeftovers.start()
     val log = freshMemLog()
     val c = clock(1000000)
     val offs = (1 to 3).flatMap(_ => log.publish((1 to 5).map(i => s"""{"i":$i}"""), nowMs = c))
@@ -66,10 +67,9 @@ class BucketStreamLogSpec extends SparkSpec {
     // exclusive-start chaining across segments
     val tail = log.consume(offs(6), 100)
     assert(tail.map(_._1) == offs.drop(7))
-    // the local working dir holds at most compaction scratch — never a .seg
-    assert(!Files.isDirectory(log.segmentDir) ||
-      !Files.list(log.segmentDir).iterator().hasNext,
-      "bucket-sim stream leaked segment files onto the filesystem")
+    // nothing on the local filesystem: no working dir, never a .seg
+    assert(local.made.isEmpty,
+      s"bucket-sim stream leaked files onto the filesystem: ${local.made}")
     // poll sees an in-process publish immediately
     val t = new Thread(() => { Thread.sleep(100); log.publish(Seq("""{"late":1}"""), nowMs = c); () })
     t.start()
@@ -93,6 +93,7 @@ class BucketStreamLogSpec extends SparkSpec {
   }
 
   test("compaction + maintain: merged segments land as whole-object puts, consume unchanged") {
+    val local = LocalLeftovers.start()
     val log = freshMemLog()
     val c = clock(3000000)
     val offs = (1 to 6).flatMap(_ => log.publish((1 to 4).map(i => s"""{"i":$i}"""), nowMs = c))
@@ -110,6 +111,8 @@ class BucketStreamLogSpec extends SparkSpec {
     // tombstoned originals were deleted from the object store
     assert(report.tombstonesPurged.nonEmpty)
     assert(log.tombstoneNames.isEmpty)
+    // the merge stages nothing locally: the tasks put the merged objects
+    assert(local.made.isEmpty, s"compaction left files on the local filesystem: ${local.made}")
   }
 
   test("purgeOrphans collects an uncommitted put after the grace window") {
@@ -164,6 +167,7 @@ class BucketStreamLogSpec extends SparkSpec {
   }
 
   test("DSv2 bulk write + streaming sink commit into the mem-rooted log") {
+    val local = LocalLeftovers.start()
     val root = s"mem:bucket-${UUID.randomUUID()}"
     val log = new StreamLog(spark, root, "s1")
     val c = clock(8000000)
@@ -178,8 +182,7 @@ class BucketStreamLogSpec extends SparkSpec {
     assert(log.consume(Offset.Beginning, 100).size == 21)
     // all segment objects live in the sim store; none on disk
     assert(StreamStores.segmentStore(root, "s1").list().nonEmpty)
-    assert(!Files.isDirectory(log.segmentDir) ||
-      !Files.list(log.segmentDir).iterator().hasNext)
+    assert(local.made.isEmpty, local.made)
 
     // streaming sink over the same mem root: exactly-once epoch commits
     // through InMemoryMetaStore's If-Match append + whole-object puts

@@ -28,8 +28,8 @@ import graft.SparkSpec
   * A failure reports its seed — re-running that one seed replays the
   * exact interleaving, fault schedule, and LIST-lag schedule. The
   * sweep drives the protocol sites directly (the manual merge-apply is
-  * byte-identical to compactOnce's apply with the distributed Spark
-  * sort elided — same put-then-tombstone+add commit order); the deep
+  * byte-identical to compactOnce's apply with the Spark merge task
+  * elided — same put-then-tombstone+add commit order); the deep
   * run at the bottom drives the REAL [[StreamLog.maintain]] Spark
   * path under the same fault pressure.
   *
@@ -310,8 +310,9 @@ class DataPlaneFuzzSpec extends SparkSpec {
 
   test("REAL maintain() (distributed compaction + clean + purge + checkpoint) under metadata faults keeps every committed record") {
     // the sweep elides the Spark merge; this drives the genuine
-    // StreamLog.maintain path — distributed sort, putFromFile, apply —
-    // over the same eventual store + faulty metadata composition
+    // StreamLog.maintain path — one merge task per window putting its
+    // segment, then the apply — over the same eventual store + faulty
+    // metadata composition
     (1L to 3L).foreach { seed =>
       val rng = new scala.util.Random(seed)
       val clock = new Clock(5000000L + seed * 1000000L)

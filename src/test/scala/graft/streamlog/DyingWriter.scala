@@ -1,12 +1,11 @@
 package graft.streamlog
 
 import java.nio.charset.StandardCharsets.UTF_8
-import java.nio.file.{Files, Paths}
 
 /** Test fixture: a SEPARATE PROCESS that claims writership of a stream,
-  * fabricates the on-disk debris of a compaction caught mid-flight (a
-  * `.merge-*` scratch directory and a merged segment moved into
-  * `segments/` whose metadata commit never landed), reports, then hangs
+  * fabricates the debris of a compaction caught mid-flight (a merged
+  * segment put into `segments/` whose metadata commit never landed),
+  * reports, then hangs
   * until the spec kill -9s it — the process-death half of the fencing
   * story that an in-JVM soak cannot exercise. Spark-free on purpose:
   * the claim is one conditional metadata append ([[MetaCommits]] over
@@ -20,16 +19,8 @@ object DyingWriter {
     val store = StreamStores.metaStore(root, stream)
     val epoch = MetaCommits.claimWriter(store, 0L)
 
-    // mid-compaction debris, created while holding the claim. On a
-    // bucket root the only debris that SURVIVES a machine loss is the
-    // uncommitted object itself (local Spark staging dies with the
-    // box); on POSIX the local scratch dir persists too, so plant both.
-    if (!StreamStores.isBucket(root)) {
-      val dir = Paths.get(root, stream)
-      val scratch = dir.resolve(".merge-dying-writer")
-      Files.createDirectories(scratch)
-      Files.write(scratch.resolve("part-00000"), "partial merge output".getBytes(UTF_8))
-    }
+    // mid-compaction debris, created while holding the claim: the
+    // merge task put its segment, the commit never ran
     StreamStores.segmentStore(root, stream)
       .put("zzzz-uncommitted-merge.seg", "never committed\n".getBytes(UTF_8))
 

@@ -579,17 +579,14 @@ class MetaStoreSpec extends SparkSpec {
     assert(proc.waitFor(30, java.util.concurrent.TimeUnit.SECONDS))
 
     // survivor takeover: re-claim past the dead writer's epoch, then one
-    // maintenance pass must reclaim ALL its debris — the scratch merge
-    // dir AND the moved-but-never-committed segment — without touching
-    // a single committed record
+    // maintenance pass must reclaim its debris — the put-but-never-
+    // committed merged segment — without touching a single committed
+    // record
     assert(log.claimWriter() == 2L)
     log.refresh()
     val report = log.maintain(orphanGraceMs = 0L, nowMs = c)
     assert(report.orphansPurged.contains("zzzz-uncommitted-merge.seg"),
       s"purged: ${report.orphansPurged}")
-    assert(report.orphansPurged.contains(".merge-dying-writer"),
-      s"purged: ${report.orphansPurged}")
-    assert(!Files.exists(java.nio.file.Paths.get(root, "s1", ".merge-dying-writer")))
     assert(!Files.exists(
       java.nio.file.Paths.get(root, "s1", "segments", "zzzz-uncommitted-merge.seg")))
     assert(log.consume(Offset.Beginning, 100) == before, "records lost in takeover")

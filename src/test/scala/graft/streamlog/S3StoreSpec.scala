@@ -130,6 +130,7 @@ class S3StoreSpec extends SparkSpec {
 
   test("StreamLog end-to-end on an s3: root — publish, consume, poll, compact, rebuild, destroy, zero local state") {
     withServer() { srv =>
+      val local = LocalLeftovers.start()
       val root = s"s3:${srv.endpoint}/b"
       val c = clock(7000000)
       val log = new StreamLog(spark, root, "s1")
@@ -162,11 +163,9 @@ class S3StoreSpec extends SparkSpec {
       rebuilt.rebuildFromSegments(nowMs = c)
       assert(rebuilt.consume(Offset.Beginning, 100).size == 11)
 
-      // nothing on the local filesystem: the scratch streamDir holds
-      // no metadata log and no segment bytes — both live in the bucket
-      assert(!Files.exists(log.streamDir.resolve("meta.jsonl")))
-      assert(!Files.exists(log.segmentDir) ||
-        Files.list(log.segmentDir).count() == 0L)
+      // nothing on the local filesystem, compaction included: the
+      // metadata log and the segment bytes both live in the bucket
+      assert(local.made.isEmpty, local.made)
       assert(srv.keys.exists(_.startsWith("s1/segments/")))
       assert(srv.keys.contains("s1/meta.jsonl"))
 

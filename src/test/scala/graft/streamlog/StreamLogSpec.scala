@@ -99,6 +99,9 @@ class StreamLogSpec extends SparkSpec {
     // pruning: only segments with lastOffset > mid are eligible
     val consumed = log.consume(mid, 100)
     assert(rows.map(r => (r.getString(0), r.getString(1))).toSeq == consumed)
+    // one task per segment, in one stage: no exchange to spread them
+    val (_, shape) = JobShape.of(spark)(log.readAfter(all(4)).collect())
+    assert((shape.stages, shape.tasks) == (1, 3), shape)
   }
 
   test("time-travel read returns everything flushed at/after T") {
@@ -476,24 +479,6 @@ class StreamLogSpec extends SparkSpec {
     assert(report.compacted.nonEmpty)
     assert(Compaction.windows(log.segments, limits).isEmpty)
     assert(log.consume(Offset.Beginning, 1000).map(_._1) == all)
-  }
-
-  test("purgeOrphans sweeps stale .merge-* scratch directories, sparing fresh ones") {
-    val log = freshLog()
-    val c = clock(9470000)
-    log.publish(Seq("""{"a":1}"""), nowMs = c)
-    val stale = log.streamDir.resolve(".merge-dead")
-    Files.createDirectories(stale)
-    Files.write(stale.resolve("part-00000"), "junk".getBytes)
-    // age the scratch dir past any grace period
-    Files.setLastModifiedTime(stale,
-      java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis() - 3600000))
-    val fresh = log.streamDir.resolve(".merge-inflight")
-    Files.createDirectories(fresh)
-    val purged = log.purgeOrphans(graceMs = 60000)
-    assert(purged.contains(".merge-dead"))
-    assert(!Files.exists(stale))
-    assert(Files.exists(fresh), "in-flight merge scratch must survive the grace period")
   }
 
   test("maintain compacts until the planner is empty, then cleans up") {

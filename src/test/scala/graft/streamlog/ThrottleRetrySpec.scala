@@ -307,8 +307,16 @@ class ThrottleRetrySpec extends SparkSpec {
         current = creds1
         srv.rotate(creds1)
         log.publish((121 to 240).map(i => s"""{"i":$i,"p":"$payload"}"""), nowMs = t)
+        // each ~54 KiB publish went up as a single PUT
+        assert(srv.partPutCount(1) == 0)
+        val postsBefore = srv.posts
         val merged = log.compactOnce(Compaction.Limits(maxSegments = 10), nowMs = t).get
         assert(merged.bytes > 64L * 1024, "merged segment must cross the MPU threshold")
+        // ...and the server saw it take the multipart path: an initiate,
+        // its part, a complete, through the storm
+        assert(srv.partPutCount(1) >= 1, "the merged segment was not a multipart upload")
+        assert(srv.posts - postsBefore >= 2, "initiate + complete POSTs")
+        assert(srv.pendingUploads == 0)
         assert(merged.sha256.matches("[0-9a-f]{64}"))
         // full verified read THROUGH the storm
         assert(log.readAfter().count() == 240L)
