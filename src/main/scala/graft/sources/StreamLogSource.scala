@@ -20,7 +20,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.SerializableConfiguration
 
-import graft.streamlog.{AuthSnapshot, MetaCommits, MetaLog, Offset, SegmentCommit, SegmentMeta, SegmentTasks, SegmentWriter, StreamStores}
+import graft.streamlog.{AuthSnapshot, MetaCommits, MetaLog, Offset, SegmentCommit, SegmentMeta, SegmentRead, SegmentTasks, SegmentWriter, StreamStores}
 
 /** DataSource V2 batch connector for the stream-log:
   *
@@ -35,9 +35,14 @@ import graft.streamlog.{AuthSnapshot, MetaCommits, MetaLog, Offset, SegmentCommi
   * into the scan and prune whole segments via the metadata index BEFORE
   * any file is opened — the object-store analog of partition pruning
   * (SURVEY.md §3): a consume-from-tail on a 100 TB stream plans only the
-  * segments whose [first,last] range can intersect. One input partition
-  * per segment preserves intra-segment order and parallelizes across
-  * segments. On POSIX and `hadoop:` roots the session's Hadoop conf
+  * segments whose [first,last] range can intersect. The surviving
+  * segments are packed, in offset order, into a few input partitions by
+  * Spark's own file-scan sizing ([[graft.streamlog.SegmentTasks.pack]]),
+  * and each task reads its segments as one chain that opens the next
+  * ones while the current one drains
+  * ([[graft.streamlog.SegmentTasks.chain]]): a 1 s trigger of 20 small
+  * segments is a job of about `defaultParallelism` tasks, not 20. On
+  * POSIX and `hadoop:` roots the session's Hadoop conf
   * reaches the tasks as one broadcast per scan (per query for
   * `readStream`), not inside every task ([[StreamLogReaderFactory]]).
   *
@@ -640,26 +645,25 @@ private[sources] object SegmentCommits {
     }
 }
 
-/** One segment scanned for offsets in (after, until]; empty `until`
-  * means unbounded (batch reads). The task opens it with
-  * [[graft.streamlog.SegmentTasks.lines]], the reader readAfter and
-  * compaction use too. */
-case class StreamLogPartition(root: String, stream: String, seg: String,
+/** An offset-ordered run of segments scanned for offsets in (after,
+  * until]; empty `until` means unbounded (batch reads). The task reads
+  * them with [[graft.streamlog.SegmentTasks.chain]], the reader
+  * readAfter and compaction use too. */
+case class StreamLogPartition(root: String, stream: String, reads: Seq[SegmentRead],
                               after: String, until: String,
-                              path: Option[String] = None,
-                              auth: Option[AuthSnapshot] = None,
-                              sha256: String = "")
+                              auth: Option[AuthSnapshot] = None)
     extends InputPartition
 
 object StreamLogPartition {
-  /** One partition per segment reading (after, until]; the driver's S3
+  /** `segs` packed into a few partitions reading (after, until]
+    * ([[graft.streamlog.SegmentTasks.pack]]); the driver's S3
     * credentials ride each so a fresh executor JVM signs its GETs. */
   def plan(root: String, stream: String, segs: Seq[SegmentMeta],
            after: String, until: String): Array[InputPartition] = {
     val auth = StreamStores.s3AuthFor(root)
-    SegmentTasks.plan(StreamStores.segmentStore(root, stream), segs)
-      .map(r => StreamLogPartition(root, stream, r.seg, after, until,
-        r.path, auth, r.sha256): InputPartition)
+    SegmentTasks.pack(org.apache.spark.sql.SparkSession.active,
+        SegmentTasks.plan(StreamStores.segmentStore(root, stream), segs))
+      .map(reads => StreamLogPartition(root, stream, reads, after, until, auth): InputPartition)
       .toArray
   }
 }
@@ -676,8 +680,7 @@ case class StreamLogReaderFactory(conf: Option[Broadcast[SerializableConfigurati
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[StreamLogPartition]
     new PartitionReader[InternalRow] {
-      private val lines = SegmentTasks.lines(p.root, p.stream, p.seg, p.sha256,
-          p.path, p.auth, conf)
+      private val lines = SegmentTasks.chain(p.root, p.stream, p.reads, p.auth, conf)
         .filter { l =>
           l.length >= Offset.Width && {
             val off = l.substring(0, Offset.Width)

@@ -296,12 +296,13 @@ final class StreamLog(val spark: SparkSession, val root: String, val name: Strin
     val segs = index.segmentsAfter(after)
     import spark.implicits._
     if (segs.isEmpty) return Seq.empty[(String, String)].toDF("offset", "data")
-    // one task per segment reads it with SegmentTasks.lines, the DSv2
-    // reader too; the Hadoop conf rides the closure only as a broadcast
+    // the segments packed into a few tasks, each reading its run as one
+    // SegmentTasks.chain, as the DSv2 reader does; the Hadoop conf
+    // rides the closure only as a broadcast
     val (r, n, auth, conf) = (root, name, StreamStores.s3AuthFor(root),
       SegmentTasks.hadoopConf(spark, root))
-    val df = tasks(SegmentTasks.plan(segStore, segs))
-      .flatMap(s => SegmentTasks.lines(r, n, s.seg, s.sha256, s.path, auth, conf))
+    val df = tasks(SegmentTasks.pack(spark, SegmentTasks.plan(segStore, segs)))
+      .flatMap(reads => SegmentTasks.chain(r, n, reads, auth, conf))
       .select(
         substring(col("value"), 1, Offset.Width).as("offset"),
         expr(s"substring(value, ${Offset.Width + 1})").as("data"))
@@ -309,7 +310,8 @@ final class StreamLog(val spark: SparkSession, val root: String, val name: Strin
   }
 
   /** `units` as a Dataset with one task per element and no exchange:
-    * a segment for [[readAfter]], a window for [[compactAll]]. */
+    * a packed run of segments for [[readAfter]], a window for
+    * [[compactAll]]. */
   private def tasks[T](units: Seq[T])(implicit enc: Encoder[T]): Dataset[T] =
     spark.createDataset(spark.sparkContext.parallelize(units, units.size)(enc.clsTag))
 
@@ -468,12 +470,12 @@ final class StreamLog(val spark: SparkSession, val root: String, val name: Strin
 
   /** Compact EVERY window of one planning pass in one Spark job of one
     * stage, one task per window: a window is a contiguous run of the
-    * sorted, non-overlapping live segments, so its task writes its
-    * inputs' lines in order through [[SegmentWriter]] (ts:521-609,
-    * kway.ts:7-55: the ordered concat of contiguous sorted segments) and
-    * puts the merged segment itself, through this handle's segment store
-    * when it runs in this JVM ([[SegmentTasks.lend]]). No shuffle, no
-    * sort, no staging.
+    * sorted, non-overlapping live segments, so its task reads its inputs
+    * as one [[SegmentTasks.chain]] and writes their lines in order
+    * through [[SegmentWriter]] (ts:521-609, kway.ts:7-55: the ordered
+    * concat of contiguous sorted segments), reading and putting through
+    * this handle's segment store when it runs in this JVM
+    * ([[SegmentTasks.lend]]). No shuffle, no sort, no staging.
     *
     * A job takes at most `maxWindowsPerJob` windows, oldest first, which
     * bounds one job's tasks and one metadata commit's lines; the

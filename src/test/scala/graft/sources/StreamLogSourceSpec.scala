@@ -16,6 +16,12 @@ class StreamLogSourceSpec extends SparkSpec {
     new StreamLog(spark, root, "s")
   }
 
+  /** Segments the DSv2 scan under `df` planned, over all its partitions. */
+  private def plannedSegments(df: org.apache.spark.sql.DataFrame): Int =
+    df.queryExecution.executedPlan.collectLeaves().collectFirst {
+      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b.inputPartitions
+    }.get.flatMap(_.asInstanceOf[StreamLogPartition].reads).size
+
   private var t = 7000000L
   private def clock: () => Long = () => { t += 1000; t }
 
@@ -41,8 +47,8 @@ class StreamLogSourceSpec extends SparkSpec {
       .option("stream", log.name).load()
 
     val afterSecond = df.filter(col("offset") > offs(1))
-    // physical partition count == surviving segments (one per segment)
-    assert(afterSecond.rdd.getNumPartitions == 2)
+    // planned segments == surviving segments
+    assert(plannedSegments(afterSecond) == 2)
     assert(afterSecond.collect().map(_.getString(0)).sorted.toSeq == offs.drop(2))
 
     // >= keeps the boundary record (loose pruning + exact Spark filter)
@@ -61,22 +67,16 @@ class StreamLogSourceSpec extends SparkSpec {
       .option("stream", log.name).load()
 
     // ORDER BY offset LIMIT 12: the 12 smallest offsets live in the first
-    // 3 segments (5+5+5 >= 12) — the scan must plan exactly 3 partitions
+    // 3 segments (5+5+5 >= 12) — the scan must plan exactly 3 segments
     val topn = df.orderBy("offset").limit(12)
     assert(topn.collect().map(_.getString(0)).toSeq == all.take(12))
-    val scan = topn.queryExecution.executedPlan.collectLeaves().collectFirst {
-      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b
-    }.get
-    assert(scan.inputRDD.getNumPartitions == 3,
-      s"expected 3 segments planned, got ${scan.inputRDD.getNumPartitions}")
+    assert(plannedSegments(topn) == 3,
+      s"expected 3 segments planned, got ${plannedSegments(topn)}")
 
     // bare LIMIT (no order): any 7 rows qualify -> 2 segments suffice
     val lim = df.limit(7)
     assert(lim.collect().length == 7)
-    val scanL = lim.queryExecution.executedPlan.collectLeaves().collectFirst {
-      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b
-    }.get
-    assert(scanL.inputRDD.getNumPartitions == 2)
+    assert(plannedSegments(lim) == 2)
 
     // with an offset bound, the first intersecting segment is partial and
     // must not count toward the guarantee: limit 5 after the first record

@@ -121,6 +121,21 @@ class TriggerCostSpec extends SparkSpec {
     }
   }
 
+  test("a 20-segment trigger plans at most defaultParallelism partitions, each an offset-ordered run of segments") {
+    withServer { (_, root) =>
+      val c = clock(9250000)
+      val log = new StreamLog(spark, root, "s1")
+      val offs = (1 to 20).flatMap(i => log.publish(Seq(rec(i), rec(i)), nowMs = c))
+      val mb = new StreamLogMicroBatch(root, "s1", Offset.Beginning)
+      val start = mb.initialOffset()
+      val parts = mb.planInputPartitions(start, mb.latestOffset(start, mb.getDefaultReadLimit))
+      assert(parts.length <= spark.sparkContext.defaultParallelism, s"${parts.length} partitions")
+      assert(parts.toSeq.flatMap(_.asInstanceOf[StreamLogPartition].reads.map(_.seg)) ==
+        log.segments.map(_.name))
+      assert(read(mb, parts).map(_._1) == offs)
+    }
+  }
+
   test("a maintain() between latestOffset and planInputPartitions still delivers every record exactly once") {
     withServer { (_, root) =>
       val c = clock(9300000)

@@ -25,8 +25,8 @@ object FreshJvmReader {
     require(S3Auth.forEndpoint(endpoint).isEmpty,
       "this fixture must start with an empty credential registry")
     val root = s"s3:$endpoint/$bucket"
-    val p = graft.sources.StreamLogPartition(root, stream, seg,
-      Offset.Beginning, "", None,
+    val p = graft.sources.StreamLogPartition(root, stream,
+      Seq(SegmentRead(seg, "", None, 0L)), Offset.Beginning, "",
       Some(AuthSnapshot(endpoint, creds, System.currentTimeMillis())))
     // an s3: scan's factory carries no Hadoop conf (it is broadcast only
     // for path-bearing roots), so this one needs no Spark context either

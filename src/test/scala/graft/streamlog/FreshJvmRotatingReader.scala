@@ -37,7 +37,7 @@ object FreshJvmRotatingReader {
     val snap = try in.readObject().asInstanceOf[AuthSnapshot] finally in.close()
     require(snap.provider.isDefined, "the snapshot must carry the provider")
     val p = graft.sources.StreamLogPartition(s"s3:$endpoint/$bucket", stream,
-      seg, Offset.Beginning, "", None, Some(snap))
+      Seq(SegmentRead(seg, "", None, 0L)), Offset.Beginning, "", Some(snap))
     val factory = graft.sources.StreamLogReaderFactory(conf = None)
     val reader = factory.createReader(p)
     var n = 0

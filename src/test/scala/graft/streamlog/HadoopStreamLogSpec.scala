@@ -109,25 +109,26 @@ class HadoopStreamLogSpec extends SparkSpec {
 
     // the planner's own partitions: every one carries a real file: URI
     val scan = new graft.sources.StreamLogScan(root, "s1", Offset.Beginning)
-    val parts = scan.planInputPartitions()
-      .map(_.asInstanceOf[graft.sources.StreamLogPartition])
-    assert(parts.length == 3)
-    assert(parts.forall(p => p.path.exists(_.startsWith("file:"))),
-      s"hadoop-rooted partitions must carry scan paths: ${parts.map(_.path).toSeq}")
+    val reads = scan.planInputPartitions()
+      .flatMap(_.asInstanceOf[graft.sources.StreamLogPartition].reads)
+    assert(reads.length == 3)
+    assert(reads.forall(r => r.path.exists(_.startsWith("file:"))),
+      s"hadoop-rooted reads must carry scan paths: ${reads.map(_.path).toSeq}")
     // offset pruning composes: a bounded scan plans fewer partitions
     val bounded = new graft.sources.StreamLogScan(root, "s1", offs(9))
       .planInputPartitions()
-      .map(_.asInstanceOf[graft.sources.StreamLogPartition])
+      .flatMap(_.asInstanceOf[graft.sources.StreamLogPartition].reads)
     assert(bounded.length < 3 && bounded.forall(_.path.exists(_.startsWith("file:"))))
 
     // a mem root (non-addressable) keeps the GET fallback shape
     val memRoot = s"mem:bucket-${java.util.UUID.randomUUID()}"
     val memLog = new StreamLog(spark, memRoot, "s1")
     memLog.publish(Seq("""{"m":1}"""), nowMs = c)
-    val memParts = new graft.sources.StreamLogScan(memRoot, "s1", Offset.Beginning)
+    val memReads = new graft.sources.StreamLogScan(memRoot, "s1", Offset.Beginning)
       .planInputPartitions()
-      .map(_.asInstanceOf[graft.sources.StreamLogPartition])
-    assert(memParts.forall(_.path.isEmpty), "non-addressable stores keep the GET path")
+      .flatMap(_.asInstanceOf[graft.sources.StreamLogPartition].reads)
+    assert(memReads.nonEmpty && memReads.forall(_.path.isEmpty),
+      "non-addressable stores keep the GET path")
 
     // end-to-end: the streamed read returns exactly the pruned records
     val df = spark.read.format("streamlog")
@@ -156,9 +157,9 @@ class HadoopStreamLogSpec extends SparkSpec {
     // micro-batch partitions also carry file paths
     val mb = new graft.sources.StreamLogMicroBatch(root, "s1", Offset.Beginning)
     val end = mb.latestOffset()
-    val mbParts = mb.planInputPartitions(mb.initialOffset(), end)
-      .map(_.asInstanceOf[graft.sources.StreamLogPartition])
-    assert(mbParts.nonEmpty && mbParts.forall(_.path.exists(_.startsWith("file:"))))
+    val mbReads = mb.planInputPartitions(mb.initialOffset(), end)
+      .flatMap(_.asInstanceOf[graft.sources.StreamLogPartition].reads)
+    assert(mbReads.nonEmpty && mbReads.forall(_.path.exists(_.startsWith("file:"))))
 
     // streaming sink with checkpoint restart: exactly-once over hadoop
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream

@@ -99,7 +99,8 @@ class StreamLogSpec extends SparkSpec {
     // pruning: only segments with lastOffset > mid are eligible
     val consumed = log.consume(mid, 100)
     assert(rows.map(r => (r.getString(0), r.getString(1))).toSeq == consumed)
-    // one task per segment, in one stage: no exchange to spread them
+    // 3 segments under 4 cores: Spark's file-scan packing gives each its
+    // own task, all in one stage: no exchange to spread them
     val (_, shape) = JobShape.of(spark)(log.readAfter(all(4)).collect())
     assert((shape.stages, shape.tasks) == (1, 3), shape)
   }
