@@ -382,13 +382,19 @@ class StreamLogMicroBatch(root: String, stream: String, startAfter: String,
   // keeps delivery exactly-once.
   @volatile private var replayed: Option[MetaLog.State] = None
 
+  // the last log this source replayed: a trigger's replay folds only
+  // the lines committed since the previous one
+  private val replayer = new MetaLog.Replayer
+  private def replay(): MetaLog.State =
+    replayer(StreamStores.metaStore(root, stream).readWithTag()._1)
+
   override def initialOffset(): SOffset = StreamLogOffset(startAfter)
 
   private def live(st: MetaLog.State): String =
     if (st.lastOffset.isEmpty) Offset.Beginning else st.lastOffset
 
   override def latestOffset(): SOffset =
-    StreamLogOffset(live(StreamStores.replay(root, stream)))
+    StreamLogOffset(live(replay()))
 
   override def prepareForTriggerAvailableNow(): Unit =
     availableNowHorizon = Some(latestOffset().asInstanceOf[StreamLogOffset].last)
@@ -416,7 +422,7 @@ class StreamLogMicroBatch(root: String, stream: String, startAfter: String,
 
   override def latestOffset(start: SOffset, limit: ReadLimit): SOffset = {
     val after = start.asInstanceOf[StreamLogOffset].last
-    val st = StreamStores.replay(root, stream)
+    val st = replay()
     replayed = Some(st)
     val horizon = availableNowHorizon.filter(_ < live(st)).getOrElse(live(st))
     val (maxRows, maxBytes) = limitsOf(limit)
@@ -449,7 +455,7 @@ class StreamLogMicroBatch(root: String, stream: String, startAfter: String,
     val until = end.asInstanceOf[StreamLogOffset].last
     if (until == Offset.Beginning) return Array.empty
     val st = replayed.filter(_.lastOffset >= until)
-      .getOrElse(StreamStores.replay(root, stream))
+      .getOrElse(replay())
     val segs = st.index.segmentsAfter(after).filter(m => m.firstOffset <= until)
     StreamLogPartition.plan(root, stream, segs, after, until)
   }

@@ -63,12 +63,20 @@ trait MetaStore {
   def readWithTag(): (Vector[String], Long)
 
   /** The log's CURRENT tag, as cheaply as the backend allows — the
-    * idle-poll probe ([[StreamLog]] calls this every poll interval).
-    * Default = `readWithTag()._2` (pay the full read); backends with a
-    * metadata-only version check override it (S3: a HEAD returns the
-    * ETag for ~zero bytes, where the default would GET the whole log
-    * ~20×/sec per idle consumer at the default interval). */
+    * existence check ([[StreamStores.streamExists]]) and the first half of
+    * [[readIfMoved]]'s default. Default = `readWithTag()._2` (pay the
+    * full read); backends with a metadata-only version check override
+    * it (S3: a HEAD returns the ETag for ~zero bytes). */
   def probeTag(): Long = readWithTag()._2
+
+  /** The log's snapshot iff it is no longer at `tag`; None while it
+    * is — the poll probe ([[StreamLog.poll]] calls this every poll
+    * interval). Default: [[probeTag]], then [[readWithTag]] if the tag
+    * moved. Backends that can answer both in one round trip override
+    * it: S3 sends one GET with `If-None-Match` (304 = not moved, 200 =
+    * the new log), POSIX and in-memory stores read once and compare. */
+  def readIfMoved(tag: Long): Option[(Vector[String], Long)] =
+    if (probeTag() == tag) None else Some(readWithTag())
 
   /** Append `lines` iff the log is still at `tag`. True = committed. */
   def appendIf(tag: Long, lines: Seq[String]): Boolean
@@ -252,6 +260,11 @@ final class PosixMetaStore(path: Path, lockDir: Path) extends MetaStore {
       }
     }
 
+  /** One locked read and a tag compare: the default's probe would
+    * read and hash the whole log once more. */
+  override def readIfMoved(tag: Long): Option[(Vector[String], Long)] =
+    Some(readWithTag()).filter(_._2 != tag)
+
   override def appendIf(tag: Long, lines: Seq[String]): Boolean =
     StreamLocks.withLock(lockDir) {
       repairTornTail()
@@ -298,6 +311,9 @@ class InMemoryMetaStore extends MetaStore {
 
   override def readWithTag(): (Vector[String], Long) =
     synchronized((lines, rev))
+
+  override def readIfMoved(tag: Long): Option[(Vector[String], Long)] =
+    Some(readWithTag()).filter(_._2 != tag)
 
   override def appendIf(tag: Long, ls: Seq[String]): Boolean = synchronized {
     if (rev != tag) false

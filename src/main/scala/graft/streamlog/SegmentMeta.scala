@@ -134,15 +134,22 @@ object MetaLog {
       .asScala.toSeq
   }
 
+  /** The state of an empty log. */
+  val Empty: State = State(SegmentIndex.empty, Map.empty, 0L, "", 0L)
+
   /** Replay from already-read log lines — the [[MetaStore]] form (a
     * conditional commit decides against the lines its read returned,
     * not against a possibly-fresher file). */
-  def replayLines(allLines: Seq[String]): State = {
-    var index = SegmentIndex.empty
-    var tombstones = Map.empty[String, Long]
-    var version = 0L
-    var writerEpoch = 0L
-    allLines.foreach { line =>
+  def replayLines(allLines: Seq[String]): State = replayFrom(Empty, allLines)
+
+  /** Fold `lines` onto `state`, the state of the lines before them:
+    * `replayFrom(replayLines(a), b) == replayLines(a ++ b)`. */
+  def replayFrom(state: State, lines: Iterable[String]): State = {
+    var index = state.index
+    var tombstones = state.tombstones
+    var version = state.producerVersion
+    var writerEpoch = state.writerEpoch
+    lines.foreach { line =>
       if (line.nonEmpty) {
         val (s, n) = MetaJson.parseLine(line)
         s.get("type").orElse(Some(if (n.contains("producer_version")) "version" else "")).get match {
@@ -166,6 +173,25 @@ object MetaLog {
       index.max.map(_.lastOffset).getOrElse(""),
       index.max.map(m => Offset.parse(m.lastOffset)._1).getOrElse(0L),
       writerEpoch)
+  }
+
+  /** [[replayLines]] that remembers the last log it replayed. A log
+    * that extends that one line for line costs a fold of its new lines
+    * only (a poll arrival adds one line, a trigger about twenty); any
+    * other log — a checkpoint rewrite, a destroy, a shorter log, an
+    * early line that differs — is replayed in full. */
+  final class Replayer {
+    private var last: (Vector[String], State) = (Vector.empty, Empty)
+
+    def apply(lines: Vector[String]): State = synchronized {
+      val (prev, st) = last
+      val next =
+        if (lines.length >= prev.length && lines.startsWith(prev))
+          replayFrom(st, lines.view.drop(prev.length))
+        else replayLines(lines)
+      last = (lines, next)
+      next
+    }
   }
 
   /** The streaming sink's committed-epoch high-water mark for one query

@@ -92,6 +92,12 @@ final class StreamLog(val spark: SparkSession, val root: String, val name: Strin
   // a commit of ours landed past loadedTag: the log holds lines the
   // state lacks, so appendMeta's first attempt could only lose
   @volatile private var replayBehind: Boolean = false
+  // bumped by every write of the state above; read and written under
+  // stateLock only (the poll probe's staleness check)
+  private var stateGen: Long = 0L
+  // the last log this handle replayed: a replay of a log that extends
+  // it folds only the new lines
+  private val replayer = new MetaLog.Replayer
 
   /** Flush notification monitor: publish() pokes it after a segment lands,
     * so same-process pollers wake immediately instead of sleeping out
@@ -141,6 +147,7 @@ final class StreamLog(val spark: SparkSession, val root: String, val name: Strin
   def claimWriter(): Long = stateLock.synchronized {
     val before = loadedTag
     val next = MetaCommits.claimWriter(store, myWriterEpoch)
+    stateGen += 1
     myWriterEpoch = next
     writerEpochVar = next
     replayBehind = !adoptOwnCommit(before)
@@ -155,7 +162,8 @@ final class StreamLog(val spark: SparkSession, val root: String, val name: Strin
     * to — load() and the poll probe share it so a probe that already
     * paid the read never reads the log a second time. */
   private def applyReplay(snap: (Vector[String], Long)): Unit = {
-    val st = MetaLog.replayLines(snap._1)
+    val st = replayer(snap._1)
+    stateGen += 1
     loadedTag = snap._2
     replayBehind = false
     index = st.index; tombstones = st.tombstones
@@ -206,6 +214,7 @@ final class StreamLog(val spark: SparkSession, val root: String, val name: Strin
     * by-contract behavior is unchanged.
     */
   private def appendMeta(lines: String*): Unit = {
+    stateGen += 1
     val before = loadedTag
     val landed = !replayBehind && writerEpochVar <= myWriterEpoch &&
       store.appendIf(before, lines)
@@ -348,18 +357,19 @@ final class StreamLog(val spark: SparkSession, val root: String, val name: Strin
     * see: a same-process publish() pokes the flush monitor and the poll
     * returns immediately; an EXTERNAL writer (second JVM, DSv2 bulk
     * load, streaming sink) can't poke this JVM, so each `intervalMs`
-    * wake probes the metadata log's cheap version TAG
-    * ([[MetaStore.readWithTag]] — file size / ETag, the same probe every
-    * conditional commit performs) and replays state only when the tag
-    * moved — a cross-process consumer therefore wakes within the probe
-    * interval, not the full timeout, and an idle stream costs one small
-    * metadata read per interval, never a segment LIST or GET.
+    * wake probes the metadata log ([[MetaStore.readIfMoved]] at the tag
+    * this handle's state replays) and installs the new log only when
+    * the tag moved. A cross-process consumer therefore wakes within the
+    * probe interval, not the full timeout. On S3 a probe is one GET
+    * with `If-None-Match`: an idle stream costs one bodiless 304 per
+    * interval, never a segment LIST or GET, and an arrival costs that
+    * one GET answered 200 plus a replay of only the lines it added.
     *
     * IDLE BACKOFF (VERDICT r15 #6): each consecutive empty probe
     * doubles the wait from `intervalMs` up to `maxIntervalMs`, so a
     * long-idle consumer settles at ~1 probe per `maxIntervalMs`
     * instead of 20/s forever (a thousand idle consumers at the
-    * defaults would otherwise sit at 20k HEADs/s fleet-wide). Latency
+    * defaults would otherwise sit at 20k probes/s fleet-wide). Latency
     * is bounded by the CAP, not the timeout: a same-process publish
     * still wakes the monitor instantly, and an external commit is seen
     * within one capped interval. Delivery resets the cadence by
@@ -386,21 +396,25 @@ final class StreamLog(val spark: SparkSession, val root: String, val name: Strin
     res
   }
 
-  /** Replay the metadata log iff its tag moved past what this handle
-    * last loaded — the cross-process wake probe. The idle case (tag
-    * unchanged — almost every wake) costs exactly ONE read of the
-    * small, checkpoint-bounded metadata log. A moved tag refreshes via
-    * a SECOND read under the state lock — deliberately not reusing the
-    * probe's own snapshot: that snapshot was taken unlocked, so a
-    * concurrent same-handle publish (producer + poller threads sharing
-    * one handle) could commit between the probe read and the apply,
-    * and installing the older snapshot would regress lastOffset/epoch;
-    * content tags don't order, so staleness can't be detected — only a
-    * locked re-read is safe. One extra read per actual data arrival is
-    * the right trade. */
+  /** Install the metadata log iff its tag moved past what this handle
+    * last loaded — the cross-process wake probe, one
+    * [[MetaStore.readIfMoved]] round trip whether or not it moved.
+    *
+    * The read runs outside the state lock, so a same-handle publish
+    * (producer and poller threads sharing one handle) may commit while
+    * it is in flight, and its snapshot may then predate that commit:
+    * installing it would regress lastOffset and the epoch. Content tags
+    * do not order, so the tag cannot tell. `stateGen` can: every write
+    * of the state bumps it under the lock, so an unchanged `stateGen`
+    * means no commit or replay of this handle's came between the
+    * capture and the install, and a snapshot read after the capture is
+    * then at least as new as the state. A moved `stateGen` falls back
+    * to a re-read under the lock. */
   private def probeExternal(): Unit = {
-    val tag = store.probeTag() // S3: a HEAD, never a whole-log GET
-    if (tag != loadedTag) refresh()
+    val (gen, tag) = stateLock.synchronized((stateGen, loadedTag))
+    store.readIfMoved(tag).foreach { snap =>
+      stateLock.synchronized(if (stateGen == gen) applyReplay(snap) else load())
+    }
   }
 
   /** Time-travel read: everything flushed at/after wall-clock T
@@ -699,6 +713,7 @@ final class StreamLog(val spark: SparkSession, val root: String, val name: Strin
         }
       }.reverse
     val keepVersion = producerVersionVar
+    stateGen += 1
     index = SegmentIndex.of(metas)
     tombstones = Map.empty
     lastOffsetVar = index.max.map(_.lastOffset).getOrElse("")

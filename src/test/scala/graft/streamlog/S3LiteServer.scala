@@ -14,8 +14,10 @@ import com.sun.net.httpserver.{HttpExchange, HttpServer}
   *     new ETag, 412 on a lost precondition, exactly the S3
   *     conditional-write API; unconditional PUT always lands.
   *   - `GET /bucket/key` — 200 + ETag (MD5 of content, quoted, as S3
-  *     computes for non-multipart objects) or 404.
-  *   - `HEAD /bucket/key` — 200 + ETag, no body (the idle-poll probe).
+  *     computes for non-multipart objects) or 404; with an
+  *     `If-None-Match` equal to the object's ETag (or `*`), 304 with the
+  *     ETag and no body (the poll probe).
+  *   - `HEAD /bucket/key` — 200 + ETag, no body (the existence check).
   *   - `DELETE /bucket/key` — 204, idempotent.
   *   - `GET /bucket?list-type=2&prefix=&continuation-token=` —
   *     ListObjectsV2 XML (keys XML-escaped, as S3 does without an
@@ -36,8 +38,9 @@ import com.sun.net.httpserver.{HttpExchange, HttpServer}
   * flight (MetaStore stated requirement #2) — so specs can prove the
   * retry path through a real status code, not a simulated boolean.
   * Per-method hit counters (`gets`/`heads`/`puts`/`deletes`) let specs
-  * assert the wire ECONOMY — e.g. an idle poll loop issues HEADs only,
-  * and one uncontended commit is exactly 1 GET + 1 PUT.
+  * assert the wire ECONOMY — e.g. an idle poll loop's GETs are all
+  * bodiless 304s (`notModified`), and one uncontended commit is
+  * exactly 1 GET + 1 PUT.
   * All object state is strongly consistent (read-after-write GET and
   * LIST), matching current S3/R2; the lagged-LIST stress lives in
   * [[EventualListSegmentStore]].
@@ -274,6 +277,7 @@ final class S3LiteServer(maxKeys: Int = 1000,
   private val postsN = new java.util.concurrent.atomic.AtomicInteger(0)
   private val getsN = new java.util.concurrent.atomic.AtomicInteger(0)
   private val headsN = new java.util.concurrent.atomic.AtomicInteger(0)
+  private val notModifiedN = new java.util.concurrent.atomic.AtomicInteger(0)
   private val deletesN = new java.util.concurrent.atomic.AtomicInteger(0)
   private val rangeGetsN = new java.util.concurrent.atomic.AtomicInteger(0)
   private val range416sN = new java.util.concurrent.atomic.AtomicInteger(0)
@@ -284,6 +288,9 @@ final class S3LiteServer(maxKeys: Int = 1000,
   def posts: Int = postsN.get
   def gets: Int = getsN.get
   def heads: Int = headsN.get
+  /** GETs answered 304 because `If-None-Match` named the object's
+    * current ETag — counted in [[gets]] as well. */
+  def notModified: Int = notModifiedN.get
   def deletes: Int = deletesN.get
   /** GETs that carried a `Range: bytes=a-b` header and were answered
     * 206 — the range-streaming read path's wire evidence. */
@@ -690,6 +697,10 @@ final class S3LiteServer(maxKeys: Int = 1000,
         getsN.incrementAndGet()
         getsByKey.computeIfAbsent(k, _ => new java.util.concurrent.atomic.AtomicInteger).incrementAndGet()
         objects.synchronized(objects.get(k)) match {
+          case Some((_, e, _)) if Option(ex.getRequestHeaders.getFirst("If-None-Match"))
+              .exists(v => v == e || v == "*") =>
+            notModifiedN.incrementAndGet()
+            respond(ex, 304, etag = Some(e))
           case Some((b, e, _)) =>
             // Range: bytes=a-b (inclusive, as S3 serves) → 206 with the
             // slice; a start at/past the object's end → 416, the signal

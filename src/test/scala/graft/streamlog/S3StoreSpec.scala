@@ -353,22 +353,47 @@ class S3StoreSpec extends SparkSpec {
   }
 
   // ------------------------------------------------------------------
-  // Wire GET economy (r15): HEAD probes, single-GET commits
+  // Wire GET economy (r15): bodiless conditional-GET probes,
+  // single-GET commits
   // ------------------------------------------------------------------
 
-  test("idle long-poll issues HEAD probes only — zero GETs, zero PUTs") {
+  test("conformance server: a GET whose If-None-Match names the ETag gets a bodiless 304; a stale one gets 200 with the body; HEAD is unchanged") {
+    withServer() { srv =>
+      val u = s"${srv.endpoint}/b/k"
+      val body = "hello\n".getBytes("UTF-8")
+      val etag = S3Http.send("PUT", u, body).etag.get
+      val (g0, nm0) = (srv.gets, srv.notModified)
+      val hit = S3Http.send("GET", u, headers = Seq("If-None-Match" -> etag))
+      assert(hit.status == 304 && hit.body.isEmpty && hit.etag.contains(etag))
+      assert(srv.gets - g0 == 1 && srv.notModified - nm0 == 1,
+        "a 304 counts as a GET and as notModified")
+      val stale = S3Http.send("GET", u, headers = Seq("If-None-Match" -> "\"0\""))
+      assert(stale.status == 200 && stale.body.sameElements(body) &&
+        stale.etag.contains(etag))
+      assert(srv.notModified - nm0 == 1, "a 200 is not notModified")
+      val h0 = srv.heads
+      val head = S3Http.send("HEAD", u)
+      assert(head.status == 200 && head.body.isEmpty && head.etag.contains(etag))
+      assert(srv.heads - h0 == 1 && srv.notModified - nm0 == 1)
+      assert(srv.hitCounts.keySet == Set("GET", "HEAD", "PUT", "DELETE"))
+    }
+  }
+
+  test("idle probes carry no log body — every probe GET is a 304, zero PUTs") {
     withServer() { srv =>
       val root = s"s3:${srv.endpoint}/b"
       val c = clock(7200000)
       val log = new StreamLog(spark, root, "s1")
       log.publish((1 to 3).map(i => s"""{"i":$i}"""), nowMs = c)
       val tip = log.lastOffset.get
-      val (g0, p0, h0) = (srv.gets, srv.puts, srv.heads)
+      val (g0, p0, nm0) = (srv.gets, srv.puts, srv.notModified)
       val got = log.poll(tip, 10, timeoutMs = 400, intervalMs = 20)
       assert(got.isEmpty)
-      assert(srv.heads - h0 >= 2, s"expected repeated HEAD probes, got ${srv.heads - h0}")
-      assert(srv.gets == g0,
-        s"an idle poll paid ${srv.gets - g0} GETs — the r14 whole-log-GET-per-probe regression")
+      val notModified = srv.notModified - nm0
+      assert(notModified >= 2, s"expected repeated 304 probes, got $notModified")
+      assert(srv.gets - g0 == notModified,
+        s"an idle poll paid ${srv.gets - g0 - notModified} GETs answered with the log — " +
+          "the r14 whole-log-GET-per-probe regression")
       assert(srv.puts == p0)
     }
   }
@@ -382,12 +407,14 @@ class S3StoreSpec extends SparkSpec {
       val tip = log.lastOffset.get
       // ADVICE r14: loadedTag used to stay at the pre-publish tag, so the
       // FIRST probe after a same-handle publish saw movement and paid a
-      // full locked replay (a whole-log GET). With the fast-forward the
-      // probe's HEAD matches and the poll window costs zero GETs.
-      val g0 = srv.gets
+      // full locked replay (a whole-log GET). With the fast-forward
+      // every probe is a bodiless 304: the poll window costs zero GETs
+      // answered with the log.
+      val (g0, nm0) = (srv.gets, srv.notModified)
       assert(log.poll(tip, 10, timeoutMs = 200, intervalMs = 25).isEmpty)
-      assert(srv.gets == g0,
-        s"first-probe-after-publish paid ${srv.gets - g0} GETs — loadedTag not fast-forwarded")
+      val bodies = (srv.gets - g0) - (srv.notModified - nm0)
+      assert(bodies == 0,
+        s"first-probe-after-publish paid $bodies GETs answered with the log — loadedTag not fast-forwarded")
       // an EXTERNAL commit still wakes the poller through the tag probe
       val other = new StreamLog(spark, root, "s1")
       val t = new Thread(() => { Thread.sleep(80); other.publish(Seq("""{"b":2}"""), nowMs = c); () })
@@ -1351,12 +1378,13 @@ class S3StoreSpec extends SparkSpec {
       log.publish(Seq("""{"i":1}"""), nowMs = c)
       val tip = log.lastOffset.get
 
-      // 3 s idle at intervalMs=50: without backoff ~60 HEAD probes;
+      // 3 s idle at intervalMs=50: without backoff ~60 probes;
       // with doubling-to-1s the schedule is ~50,100,200,400,800,1000…
-      // ≈ 7 probes (+1 initial)
-      val h0 = srv.heads
+      // ≈ 7 probes (+1 initial). A probe is a HEAD on a store that
+      // keeps readIfMoved's default, a 304 GET on S3MetaStore.
+      val (h0, nm0) = (srv.heads, srv.notModified)
       assert(log.poll(tip, 10, timeoutMs = 3000, intervalMs = 50).isEmpty)
-      val probes = srv.heads - h0
+      val probes = (srv.heads - h0) + (srv.notModified - nm0)
       assert(probes <= 12, s"idle window paid $probes probes — backoff missing")
       assert(probes >= 4, s"only $probes probes — poll not probing at all?")
 

@@ -17,6 +17,11 @@ and whether the gain rule holds: the change wins at least nine tenths
 of the pairs, and the medians differ by more than the distance between
 the parent's quartiles.
 
+A run that exits non-zero loses only its pair: the pair is reported
+with the tail of its stderr, the A/B goes on, the summary covers the
+pairs that completed, and the script exits non-zero. The summary also
+names every pair with a run that read `correct: false` or `failed > 0`.
+
 The two checkouts must be separate directories (e.g. made with
 `git clone` or `git archive`): each run builds and writes under the
 checkout it runs in.
@@ -30,6 +35,10 @@ import time
 from pathlib import Path
 
 
+class RunFailed(Exception):
+    """A run of run.py that exited non-zero or printed no result."""
+
+
 def run(checkout, workload, seed, seconds, trace):
     """One run of run.py in `checkout`: (result, host) JSON objects."""
     cmd = [sys.executable, "perfbench/run.py", "--workload", workload,
@@ -37,7 +46,7 @@ def run(checkout, workload, seed, seconds, trace):
     out = subprocess.run(cmd, cwd=checkout, capture_output=True, text=True)
     lines = out.stdout.strip().splitlines()
     if out.returncode != 0 or not lines:
-        sys.exit(f"{checkout} seed {seed}: exit {out.returncode}\n{out.stderr[-2000:]}")
+        raise RunFailed(f"{checkout} seed {seed}: exit {out.returncode}\n{out.stderr[-2000:]}")
     result = json.loads(lines[-1])
     detail = json.loads(lines[-2]) if len(lines) > 1 else {}
     return result, detail.get("host", {})
@@ -76,22 +85,34 @@ def main():
 
     sides = {"parent": a.parent, "change": a.change}
     values = {"parent": {}, "change": {}}  # side -> metric -> [value per pair]
+    lost, flagged = [], []  # pairs with a failed run; pairs with a bad result
     for i in range(a.pairs):
         seed = a.first_seed + i
         order = ["parent", "change"] if i % 2 == 0 else ["change", "parent"]
-        for side in order:
-            t0 = time.monotonic()
-            res, host = run(sides[side], a.workload, seed, a.seconds, a.trace)
-            metrics = {k: v["value"] for k, v in res["metrics"].items()}
+        pair = {}
+        try:
+            for side in order:
+                t0 = time.monotonic()
+                res, host = run(sides[side], a.workload, seed, a.seconds, a.trace)
+                pair[side] = {k: v["value"] for k, v in res["metrics"].items()}
+                if not res["correct"] or res["failed"] > 0:
+                    flagged.append(f"pair {i + 1} seed {seed} {side}: "
+                                   f"correct={res['correct']} failed={res['failed']}")
+                print(f"pair {i + 1} seed {seed} {side:6s} wall={time.monotonic() - t0:.0f}s "
+                      f"correct={res['correct']} failed={res['failed']}/{res['attempted']} "
+                      f"contended={host.get('contended')} steal_cores={host.get('steal_cores')} "
+                      + " ".join(f"{k}={v:.4g}" for k, v in pair[side].items()), flush=True)
+        except RunFailed as e:
+            lost.append(f"pair {i + 1} seed {seed}")
+            print(f"pair {i + 1} seed {seed} FAILED, pair dropped: {e}", flush=True)
+            continue
+        for side, metrics in pair.items():
             for k, v in metrics.items():
                 values[side].setdefault(k, []).append(v)
-            print(f"pair {i + 1} seed {seed} {side:6s} wall={time.monotonic() - t0:.0f}s "
-                  f"correct={res['correct']} failed={res['failed']}/{res['attempted']} "
-                  f"contended={host.get('contended')} steal_cores={host.get('steal_cores')} "
-                  + " ".join(f"{k}={v:.4g}" for k, v in metrics.items()), flush=True)
 
     better = directions(a.change)
-    print(f"\n{a.workload}: {a.pairs} pairs, {a.seconds} s each, trace={a.trace}")
+    print(f"\n{a.workload}: {a.pairs - len(lost)} of {a.pairs} pairs completed, "
+          f"{a.seconds} s each, trace={a.trace}")
     print(f"{'metric':32s} {'parent median [q1, q3]':>30s} {'change median [q1, q3]':>30s}"
           f" {'wins':>6s}  gain")
     for k in sorted(set(values["parent"]) & set(values["change"])):
@@ -105,6 +126,12 @@ def main():
         pcol = f"{pmed:.4g} [{pq1:.4g}, {pq3:.4g}]"
         ccol = f"{cmed:.4g} [{cq1:.4g}, {cq3:.4g}]"
         print(f"{k:32s} {pcol:>30s} {ccol:>30s} {wins:>3d}/{n:<2d}  {'yes' if gain else 'no'}")
+    for f in flagged:
+        print(f"FLAGGED {f}")
+    for p in lost:
+        print(f"LOST {p}: a run exited non-zero")
+    if lost:
+        sys.exit(1)
 
 
 if __name__ == "__main__":
