@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
 
-import graft.functions.{DotProduct, MinHashSigs, PostingPairs, RollingMinHash, SimHash60, SortedHashes, SortedIntersectCount, WordShingles}
+import graft.functions.{DotProduct, MinHashSigs, PostingPairs, RollingMinHash, SignBits, SimHash60, SortedHashes, SortedIntersectCount, WordShingles}
 
 /** SparkSessionExtensions entry point: makes the native expressions
   * available to SQL users —
@@ -14,6 +14,7 @@ import graft.functions.{DotProduct, MinHashSigs, PostingPairs, RollingMinHash, S
   * [[GraftFunctions.register]] on an existing session) enables
   *
   *   graft_dot(ARRAY<DOUBLE>, ARRAY<DOUBLE>)       -> DOUBLE
+  *   graft_sign_bits(ARRAY<DOUBLE>, ARRAY<ARRAY<DOUBLE>>) -> BIGINT
   *   minhash_sigs(ARRAY<STRING>, n)                -> ARRAY<BIGINT>
   *   rolling_minhash(STRING, k)                    -> BIGINT
   *   word_shingles(ARRAY<STRING>, n)               -> ARRAY<STRING>
@@ -46,6 +47,9 @@ object GraftFunctions {
     (FunctionIdentifier("graft_dot"),
       new ExpressionInfo(classOf[DotProduct].getName, "graft_dot"),
       (es: Seq[Expression]) => DotProduct(es(0), es(1))),
+    (FunctionIdentifier("graft_sign_bits"),
+      new ExpressionInfo(classOf[SignBits].getName, "graft_sign_bits"),
+      (es: Seq[Expression]) => SignBits(es(0), es(1))),
     (FunctionIdentifier("minhash_sigs"),
       new ExpressionInfo(classOf[MinHashSigs].getName, "minhash_sigs"),
       (es: Seq[Expression]) => MinHashSigs(es(0), intLit(es(1), "minhash_sigs"))),

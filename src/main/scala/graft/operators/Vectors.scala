@@ -34,15 +34,13 @@ object Vectors {
   /** signs(p)(d) ∈ {+1, -1}. */
   val signs: IndexedSeq[IndexedSeq[Int]] = signsFor(NPlanes)
 
-  /** Spark literal: ARRAY<ARRAY<DOUBLE>> of ±1.0, indexed plane → dim.
-    * The ±1.0-double form lets the signature fold be a bare multiply-add
-    * (`aggregate(zip_with(v, pv, *), +)`) — the same shape DuckDB's
-    * list_dot_product evaluates, and ~5× cheaper than per-dim
-    * substring/CASE decoding under Spark's interpreted higher-order
-    * functions.
-    */
-  def planesLit: Column =
-    array(signs.map(row => array(row.map(s => lit(s.toDouble)): _*)): _*)
+  /** Spark literal: ARRAY<ARRAY<DOUBLE>> of ±1.0, indexed plane → dim,
+    * for `nPlanes` planes ([[signsFor]]) — the planes argument of
+    * [[graft.functions.SignBits]]. Plain doubles keep each plane's fold
+    * a bare multiply-add, the same shape DuckDB's list_dot_product
+    * evaluates over [[duckPlanesLitN]]. */
+  def planesLit(nPlanes: Int): Column =
+    array(signsFor(nPlanes).map(row => array(row.map(s => lit(s.toDouble)): _*)): _*)
 
   /** DuckDB literal: DOUBLE[][] of the same matrix, for list_dot_product. */
   def duckPlanesLit: String =
@@ -81,16 +79,11 @@ object Vectors {
       s"signature must fit one BIGINT: got $nPlanes planes")
     import org.apache.spark.sql.functions.{col, expr}
     import graft.functions.VectorFunctions._
-    // one codegen'd DotProduct per plane against a constant ±1 vector —
-    // the whole signature is a single whole-stage-codegen projection.
-    val dots = org.apache.spark.sql.functions.array(
-      signsFor(nPlanes).map(row => dot(col("v"), constVec(row.map(_.toDouble)))): _*)
+    // one SignBits kernel per row: a single pass over the planes, every
+    // plane's fold the DotProduct fold, in one codegen'd loop
     embeddings
       .select(col("vec_id"), expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"))
-      .withColumn("dots", dots)
-      .withColumn("sig", expr(
-        s"""aggregate(sequence(0, ${nPlanes - 1}), CAST(0 AS BIGINT), (acc, p) ->
-          |  acc + (CASE WHEN dots[p] > 0D THEN shiftleft(CAST(1 AS BIGINT), p) ELSE CAST(0 AS BIGINT) END))""".stripMargin))
+      .withColumn("sig", signBits(col("v"), planesLit(nPlanes)))
       .withColumn("norm", l2norm(col("v")))
       .select(col("vec_id"), col("v"), col("norm"), col("sig"))
   }

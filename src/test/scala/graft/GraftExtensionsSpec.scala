@@ -9,14 +9,16 @@ class GraftExtensionsSpec extends SparkSpec {
     val r = spark.sql(
       """SELECT
         |  graft_dot(array(1D, 2D, 3D), array(2D, 0.5D, 1D)) AS d,
+        |  graft_sign_bits(array(1D, 2D), array(array(1D, 1D), array(-1D, 0D), array(0D, 1D))) AS sb,
         |  minhash_sigs(array('aa', 'bb'), 4) AS sigs,
         |  rolling_minhash('abcdefghij', 8) AS fp""".stripMargin).head()
     assert(r.getDouble(0) == 6.0)
+    assert(r.getLong(1) == 5L) // planes 0 and 2 positive, plane 1 negative
     val expSigs = (0 until 4).map(s => Seq("aa", "bb")
       .map(x => HashKernels.mulMod61(HashKernels.seedMult(s), HashKernels.hash60(x))).min)
-    assert(r.getSeq[Long](1) == expSigs)
+    assert(r.getSeq[Long](2) == expSigs)
     val expFp = (0 to 2).map(i => HashKernels.hash60("abcdefghij".substring(i, i + 8))).min
-    assert(r.getLong(2) == expFp)
+    assert(r.getLong(3) == expFp)
   }
 
   test("shingle/simhash/set-intersection SQL functions evaluate the kernels") {
@@ -49,7 +51,7 @@ class GraftExtensionsSpec extends SparkSpec {
     val extensions = new org.apache.spark.sql.SparkSessionExtensions
     ext(extensions) // must not throw; function list is shared with register()
     assert(GraftFunctions.descriptors.map(_._1.funcName).sorted ==
-      Seq("graft_dot", "minhash_sigs", "posting_pairs", "rolling_minhash",
+      Seq("graft_dot", "graft_sign_bits", "minhash_sigs", "posting_pairs", "rolling_minhash",
         "simhash60", "sorted_hashes", "sorted_intersect_count", "word_shingles"))
   }
 }

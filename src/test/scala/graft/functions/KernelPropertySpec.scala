@@ -1,7 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, GenericInternalRow}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.types.{ArrayType, DoubleType}
 import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -116,5 +117,32 @@ class KernelPropertySpec extends AnyFunSuite {
         assert(got == exp, s"s=$s k=$k")
       }
     }
+  }
+
+  test("SignBits' interpreted path sets bit p iff the left fold v·plane_p is positive") {
+    val kernel = SignBits(BoundReference(0, ArrayType(DoubleType), nullable = true),
+      BoundReference(1, ArrayType(ArrayType(DoubleType)), nullable = true))
+    def special(): Double = rnd.nextInt(40) match {
+      case 0 => Double.NaN
+      case 1 => Double.PositiveInfinity
+      case 2 => -0.0
+      case 3 => 0.0
+      case _ => rnd.nextGaussian()
+    }
+    (1 to 500).foreach { _ =>
+      val nPlanes = rnd.nextInt(64) + 1
+      val dims = rnd.nextInt(70)
+      val v = Seq.fill(dims)(special())
+      val planes = Seq.fill(nPlanes)(Seq.fill(rnd.nextInt(70))(if (rnd.nextBoolean()) 1.0 else -1.0))
+      val exp = planes.zipWithIndex.foldLeft(0L) { case (bits, (plane, p)) =>
+        val dot = v.zip(plane).foldLeft(0.0) { case (acc, (x, y)) => acc + x * y }
+        if (dot > 0.0 || dot.isNaN) bits | (1L << p) else bits
+      }
+      val row = new GenericInternalRow(Array[Any](
+        new GenericArrayData(v.toArray[Any]),
+        new GenericArrayData(planes.map(pl => new GenericArrayData(pl.toArray[Any]): Any).toArray)))
+      assert(kernel.eval(row) == exp, s"v=$v planes=$planes")
+    }
+    assert(kernel.eval(new GenericInternalRow(Array[Any](null, longArray(Nil)))) == null)
   }
 }
